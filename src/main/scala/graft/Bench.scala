@@ -1,804 +1,51 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+
+/** Per-query wall clock over the registry, printed as ONE JSON line on
+  * stdout (the untruncated copy also lands in BENCH_FULL.json):
+  *
+  *   runMain graft.Bench [sfDir]   (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS)
+  *
+  * Fields, in order: `metric`, `unit`, `cpus`, `sf`, `sf_num`, `samples`
+  * (each query's raw per-round timings, chronological), `queries` (each
+  * query's min), `failed`, `value` (the sum of mins; -1 if any query
+  * failed) and `steal_delta` (hypervisor steal ticks across the timed
+  * rounds, null off Linux). Where the time goes layer by layer is
+  * perfbench's job (`perfbench/README.md`), not this line's.
+  */
 object Bench {
-  /** The plan with its trailing determinism Sort removed, if it has one:
-    * a global Sort at the root, or one sitting under trailing Project
-    * nodes (a query that re-projects after its orderBy). Deliberately
-    * does NOT descend through Limit: a global Sort under a Limit is
-    * top-k semantics — removing it would change WHICH rows the query
-    * computes, not just their order, so the "same rows, unordered"
-    * diagnostic contract would no longer hold. Returns None when there
-    * is no strippable sort; the caller records that query as unstripped
-    * so readers exclude it from ordered-vs-unordered cohort comparison
-    * (its two numbers are the same plan). Window/partition-local sorts
-    * (`global = false`) are never touched — they're operator semantics.
-    */
-  private[graft] def withoutTopSort(plan: LogicalPlan): Option[LogicalPlan] =
-    plan match {
-      case s: Sort if s.global => Some(s.child)
-      case p: Project => withoutTopSort(p.child).map(c => p.copy(child = c))
-      case _ => None
-    }
+  /** Interleaved whole-suite rounds; each query keeps its min. Running
+    * the full suite N times decorrelates host noise: a disturbance in
+    * round k lands on a different query's slot in round k+1, where
+    * back-to-back repeats of one query tend to share it. */
+  private[graft] val Rounds = 3
 
-  /** Best-effort git HEAD sha, read straight from `.git` (no process
-    * fork — the bench must not pay or depend on a `git` binary).
-    * Resolves `ref:` indirection and falls back to `packed-refs`; None
-    * when there's no repo or anything looks off. History lines carry
-    * this so a cross-round citation ("run X was commit Y") doesn't
-    * depend on matching timestamps to the git log. */
-  private[graft] def gitHeadSha(repoRoot: String = "."): Option[String] = {
-    def read(p: java.nio.file.Path): Option[String] =
-      try Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
-      catch { case _: Exception => None }
-    val git = java.nio.file.Paths.get(repoRoot, ".git")
-    read(git.resolve("HEAD")).flatMap { head =>
-      if (head.startsWith("ref: ")) {
-        val ref = head.stripPrefix("ref: ").trim
-        read(git.resolve(ref)).orElse(
-          read(git.resolve("packed-refs")).flatMap(_.linesIterator
-            .map(_.trim).find(_.endsWith(" " + ref)).map(_.split(' ').head)))
-      } else Some(head)
-    }.filter(_.matches("[0-9a-f]{40}"))
-  }
-
-  /** Machine-load covariate for adjudicating bench noise: /proc/loadavg's
-    * three averages. The d57/d58 rounds had to INFER "sustained VM
-    * disturbance" from run-shape across two fresh runs; a loadavg far
-    * above the worker count stamped INTO the history line makes the same
-    * call one-run evidence. None (serialized null) when unreadable
-    * (non-Linux). */
-  private[graft] def readLoadAvg(path: String = "/proc/loadavg"): Option[(Double, Double, Double)] =
-    try {
-      val parts = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8").trim.split("\\s+")
-      Some((parts(0).toDouble, parts(1).toDouble, parts(2).toDouble))
-    } catch { case _: Exception => None }
+  private[graft] type Query = (SparkSession, String) => DataFrame
 
   /** Cumulative steal ticks (field 8 of the aggregate `cpu` line in
-    * /proc/stat) — time the hypervisor ran OTHER tenants while this VM
-    * was runnable. A nonzero start→end delta is direct evidence of the
-    * noisy-neighbor mode loadavg can't see (loadavg counts our own
-    * demand; steal counts the host taking the CPU away). Raw cumulative
-    * value both times; readers difference them. */
+    * /proc/stat): time the hypervisor ran other tenants while this VM
+    * was runnable. None when unreadable. */
   private[graft] def readStealTicks(path: String = "/proc/stat"): Option[Long] =
     try {
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-        .linesIterator.find(_.startsWith("cpu "))
+      val src = scala.io.Source.fromFile(path)
+      try src.getLines().find(_.startsWith("cpu "))
         .map(_.trim.split("\\s+")).filter(_.length > 8).map(_(8).toLong)
+      finally src.close()
     } catch { case _: Exception => None }
-
-  /** One covariate snapshot as JSON — shape pinned by BenchHistorySpec. */
-  private[graft] def covariateJson(load: Option[(Double, Double, Double)],
-                                   steal: Option[Long]): String = {
-    val l = load.map { case (a, b, c) => s"[$a,$b,$c]" }.getOrElse("null")
-    s"""{"loadavg":$l,"steal_ticks":${steal.map(_.toString).getOrElse("null")}}"""
-  }
-
-  /** The non-comparable steal bar, shared with tools/bench_history.py's
-    * SUSPECT_STEAL_DELTA (keep the two in sync — the tool's selftest and
-    * BenchHistorySpec each pin their own copy at 400). Calibration
-    * rationale lives in the tool's module docstring. */
-  private[graft] val SuspectStealDelta = 400L
 
   /** Start→end stolen ticks; None unless both endpoints were readable. */
   private[graft] def stealDeltaOf(s0: Option[Long], s1: Option[Long]): Option[Long] =
     for (a <- s0; b <- s1) yield b - a
 
-  /** The run's own verdict on whether it is usable as a cross-round
-    * anchor, mirroring tools/bench_history.py `non_comparable`: flagged
-    * when the steal delta exceeds [[SuspectStealDelta]] or the 1-minute
-    * loadavg at either endpoint exceeds the worker count. None
-    * (serialized null) when NO covariate was readable — unknown is not
-    * clean. With partial covariates the readable ones adjudicate (same
-    * as the tool: absence of one covariate never flags, and never
-    * launders a dirty reading on the other). */
-  private[graft] def nonComparable(cpus: Int,
-                                   loadStart: Option[(Double, Double, Double)],
-                                   loadEnd: Option[(Double, Double, Double)],
-                                   stealD: Option[Long]): Option[Boolean] =
-    if (loadStart.isEmpty && loadEnd.isEmpty && stealD.isEmpty) None
-    else Some(
-      stealD.exists(_ > SuspectStealDelta) ||
-        loadStart.exists(_._1 > cpus) ||
-        loadEnd.exists(_._1 > cpus))
-
-  // ── Per-query outlier self-adjudication ────────────────────────────
-  // Twice (r15's one-shot 6.4s, r17's full-run 12.5s) a single query's
-  // weather spike polluted the headline and a human had to adjudicate it
-  // from BENCH_HISTORY by hand. The data to do that automatically is in
-  // the history file: every run's per-query samples with covariates.
-  // Each run now checks its own per-query mins against the median of
-  // comparable history (same cpus/sf/mode cohort, noncomparable:false)
-  // and emits a `suspect` block; when the run's own covariates are clean
-  // it re-runs JUST the flagged queries once so the artifact carries the
-  // settling sample itself.
-
-  /** A query needs this many comparable history mins before it has a
-    * band — a new query is never flagged against thin evidence. */
-  private[graft] val SuspectMinHistory = 5
-  /** Flag when this run's min exceeds ratio × the history median.
-    * Calibrated on the full real history (sweep over every line, each
-    * judged against the bands available at its own timestamp): at 1.5
-    * exactly two clean lines flag across the entire record — the r15
-    * 6.4 s one-shot (1.66× its then-band) and the r17 12.46 s capture
-    * (3.1×) — i.e. precisely the two incidents that each cost a judge
-    * session, with ZERO false flags on ~40 clean lines spanning quiet,
-    * diffusely-degraded, and storm days. 2.0 would miss the r15 case.
-    * (That zero-false-flag count is the PRE-SHIP record the bar was
-    * calibrated on; flags fired live since then are by design — each
-    * adjudicated on its own line, see README's firing log. The
-    * calibration replay is `bench_history.py --suspect-replay`.) */
-  private[graft] val SuspectRatio = 1.5
-  /** …AND by more than this absolute excess: sub-second queries clear
-    * any ratio bar on scheduler jitter alone (diffuse-weather drift is
-    * 1.06–1.16× geomean and never +0.5 s on one query; the real d57
-    * spikes were +2.5 s and +8.5 s). This floor is what keeps the 1.5
-    * ratio false-positive-free on the historical record. */
-  private[graft] val SuspectFloorSec = 0.5
-
-  private[graft] def medianOf(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  /** JSON number as Double across json4s's numeric encodings; None for
-    * anything else (including bool — json4s keeps them distinct) AND for
-    * non-finite values: a mangled history line with `1e999` parses to
-    * Infinity, which must never enter a band median or a carried lead —
-    * re-serialized, it would be the JSON-invalid token `Infinity` and
-    * invalidate THIS run's line (which the next run would then silently
-    * discard as unparseable). */
-  private def jnum(v: org.json4s.JValue): Option[Double] = {
-    import org.json4s._
-    (v match {
-      case JDouble(d)  => Some(d)
-      case JInt(n)     => Some(n.toDouble)
-      case JLong(n)    => Some(n.toDouble)
-      case JDecimal(d) => Some(d.toDouble)
-      case _           => None
-    }).filter(java.lang.Double.isFinite(_))
-  }
-
-  /** A Double as a JSON number token, `null` when non-finite — the
-    * serialization-side twin of [[jnum]]'s parse-side guard (belt and
-    * braces: even if a future code path lets NaN/Infinity reach a
-    * serializer, the emitted line stays valid JSON). */
-  private[graft] def jsonNum(d: Double): String =
-    if (java.lang.Double.isFinite(d)) d.toString else "null"
-
-  /** ONE history line parsed, returned only if it is usable as evidence
-    * for this run's cohort: same cpus (number, or the round-13 string
-    * vintage), same sf_num, same headline-mode cohort (ordered headline
-    * = mode both|ordered; unordered headline = mode unordered — the two
-    * time different plans), and self-adjudicated `noncomparable:false`
-    * (absent/null = unknown, and unknown is not clean). Unparseable or
-    * foreign lines are None, never fatal: history checks must not be
-    * able to break a bench. Shared by the band builder
-    * ([[lineQueryMins]]) and the prior-lead reader ([[openLeadsOf]]) so
-    * the two features can never disagree on what "comparable" means. */
-  private[graft] def parseComparable(line: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean): Option[org.json4s.JValue] =
-    try {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(line)
-      val cpusOk = (j \ "cpus") match {
-        case JString(s) => s.toIntOption.contains(cpus) // round-13 vintage
-        case v          => jnum(v).contains(cpus.toDouble)
-      }
-      val sfOk = sfNum.exists(x => jnum(j \ "sf_num").contains(x))
-      val modeOk = (j \ "mode") match {
-        case JString(m) =>
-          if (headlineOrdered) m == "both" || m == "ordered" else m == "unordered"
-        case _ => false
-      }
-      val cleanOk = (j \ "noncomparable") == JBool(false)
-      if (cpusOk && sfOk && modeOk && cleanOk) Some(j) else None
-    } catch { case _: Exception => None }
-
-  /** Per-query mins of ONE already-accepted (see [[parseComparable]])
-    * line's JSON. */
-  private def minsOfJson(j: org.json4s.JValue): Map[String, Double] = {
-    import org.json4s._
-    (j \ "samples") match {
-      case JObject(fields) =>
-        fields.flatMap { case (name, v) =>
-          v match {
-            case JArray(vs) =>
-              val ds = vs.flatMap(jnum)
-              if (ds.nonEmpty) Some(name -> ds.min) else None
-            case _ => None
-          }
-        }.toMap
-      case _ => // pre-samples vintage: per-query mins live in `queries`
-        (j \ "queries") match {
-          case JObject(fields) =>
-            fields.flatMap { case (name, v) => jnum(v).map(name -> _) }.toMap
-          case _ => Map.empty
-        }
-    }
-  }
-
-  /** Per-query minimum extracted from ONE history line, empty unless
-    * [[parseComparable]] accepts it for this cohort. */
-  private[graft] def lineQueryMins(line: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean): Map[String, Double] =
-    parseComparable(line, cpus, sfNum, headlineOrdered)
-      .map(minsOfJson).getOrElse(Map.empty)
-
-  /** All comparable-history per-query mins for this cohort, accumulated
-    * across the history file. Missing/unreadable file → empty (first
-    * run on a fresh clone benches unflagged, it doesn't crash). */
-  private[graft] def historyBands(path: String, cpus: Int,
-      sfNum: Option[Double],
-      headlineOrdered: Boolean): Map[String, Seq[Double]] =
-    scanHistory(path, cpus, sfNum, headlineOrdered)._1
-
-  /** The flagged queries: min > [[SuspectRatio]] × history median AND
-    * more than [[SuspectFloorSec]] above it, with at least
-    * [[SuspectMinHistory]] comparable mins behind the band. Returns
-    * query -> (band median, history size). */
-  private[graft] def suspectsOf(best: Map[String, Double],
-      hist: Map[String, Seq[Double]]): Map[String, (Double, Int)] =
-    best.flatMap { case (q, v) =>
-      hist.get(q).filter(_.size >= SuspectMinHistory).flatMap { mins =>
-        val med = medianOf(mins)
-        if (v > SuspectRatio * med && v - med > SuspectFloorSec)
-          Some(q -> (med, mins.size))
-        else None
-      }
-    }
-
-  /** The suspect block serialized for the line's tail: the flagged
-    * names, per-query evidence (this run's min, the band median it
-    * breached, the band size, and the clean-covariate re-run sample or
-    * null), and the steal delta bracketing the re-runs (null when none
-    * ran). Rides tail-most with the other verdict fields so a
-    * tail-truncated BENCH_rN capture keeps the flag. */
-  private[graft] def suspectJson(suspect: Map[String, (Double, Int)],
-      best: Map[String, Double], rerun: Map[String, Double],
-      rerunStealD: Option[Long]): String = {
-    val names = suspect.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val detail = suspect.toSeq.sortBy(_._1).map { case (q, (med, n)) =>
-      s""""$q":{"min":${jsonNum(best(q))},"band_median":${jsonNum(med)},"n":$n,""" +
-        s""""rerun":${rerun.get(q).map(jsonNum).getOrElse("null")}}"""
-    }.mkString("{", ",", "}")
-    s""""suspect":$names,"suspect_detail":$detail,""" +
-      s""""rerun_steal_delta":${rerunStealD.map(_.toString).getOrElse("null")}"""
-  }
-
-  // ── Prior-lead adjudication (the reading rule, automated) ──────────
-  // A suspect whose clean-covariate re-run REPEATED the elevation is a
-  // lead, not yet a regression: a sticky-state transient (JIT deopt /
-  // GC / page cache pinned in that JVM) repeats within its own process,
-  // while a plan regression also reproduces on the next fresh run. The
-  // q42 firing (2026-08-15) was exactly this shape — rerun 3.58 s
-  // "confirmed" the 3.22 s breach, and the next comparable run 17 min
-  // later read 1.96 s, dead on median — but closing it took a human
-  // reading BENCH_HISTORY against the git log. Each run now closes the
-  // loop itself: it reads the MOST RECENT comparable cohort line, and
-  // if that line carries open suspects (re-run repeated the breach, or
-  // never ran), this run's own min for each such query adjudicates the
-  // lead on the record — `refuted` (back in band: transient) or
-  // `confirmed` (breached again on a fresh pass: bisect now).
-
-  /** One open suspect lead read from history: the flagged run's min,
-    * its clean-covariate rerun (None = never ran), and the line where
-    * the evidence was MEASURED (ts, sha) — carried verbatim through
-    * carry-forward hops, so a reader bisecting from a lead's origin sha
-    * lands on the commit that actually produced prior_min/prior_rerun,
-    * not on whichever line happened to carry the lead last. None origin
-    * only for pre-origin-vintage carried entries whose carrier also
-    * lacked a src. */
-  private[graft] final case class Lead(min: Double, rerun: Option[Double],
-      origin: Option[(String, String)])
-
-  /** The last cohort-comparable history line, parsed: provenance
-    * (ts, sha) and its open leads. */
-  private[graft] final case class PriorLine(ts: String, sha: String,
-      leads: Map[String, Lead])
-
-  /** A history line usable as the TRUSTED headline reference
-    * (`last_clean`): cohort-comparable AND nothing wrong with its own
-    * headline — no failed queries (a failed line's value is the -1.0
-    * sentinel) and no suspects (a flagged query's spiked min stays in
-    * the headline sum even when the rerun self-cleared; the settling
-    * sample is recorded beside it, not merged). Comparability alone is
-    * a covariate verdict and says nothing about either. jvmRun rides
-    * along so a reader never mistakes a warm repeat for a cold fresh
-    * invocation (None on a pre-jvm_run vintage line). `inBand` (round
-    * 20) discloses where the reference sits relative to the documented
-    * anchor band: Some(true) = inside [lo, hi]; Some(false) = a
-    * reference-grade line that is itself outside the band (e.g. a
-    * diffusely-elevated evening where every clean line ran high — the
-    * 2026-08-15 session produced a clean suspect-free 58.41 s line
-    * above hi 56); None = no applicable band (missing file or foreign
-    * (cpus, sf) cohort). The scan PREFERS the most recent in-band
-    * reference when one exists, falling back to the most recent
-    * reference-grade line of any position — so a stale band (host
-    * re-based past it) degrades to the round-19 behavior instead of
-    * leaving the reference null. */
-  private[graft] final case class CleanRef(ts: String, sha: String,
-      jvmRun: Option[Int], value: Double, inBand: Option[Boolean] = None)
-
-  /** The [[CleanRef]] of ONE already-accepted (cohort-comparable) line,
-    * None when its own headline is not reference-grade (failed queries,
-    * suspects, or a missing/non-finite/negative value). Absent arrays
-    * read as empty: a pre-suspect-vintage line can't disqualify on a
-    * field it never carried. */
-  private def cleanRefOfJson(j: org.json4s.JValue): Option[CleanRef] = {
-    import org.json4s._
-    def emptyArr(v: JValue): Boolean = v match {
-      case JArray(xs) => xs.isEmpty
-      case _          => true
-    }
-    def str(v: JValue): String = v match {
-      case JString(s) => s
-      case _          => "unknown"
-    }
-    for {
-      v <- jnum(j \ "value")
-      if v >= 0 && emptyArr(j \ "failed") && emptyArr(j \ "suspect")
-    } yield CleanRef(str(j \ "ts"), str(j \ "sha"),
-      jnum(j \ "jvm_run").map(_.toInt), v)
-  }
-
-  /** Open leads of ONE already-accepted line's JSON (see
-    * [[openLeadsOf]] for the contract). */
-  private def leadsOfJson(j: org.json4s.JValue): PriorLine = {
-    import org.json4s._
-    def str(v: JValue): String = v match {
-      case JString(s) => s
-      case _          => "unknown"
-    }
-    def tsSha(v: JValue): Option[(String, String)] = v match {
-      case JObject(_) => Some((str(v \ "ts"), str(v \ "sha")))
-      case _          => None
-    }
-    val ts = str(j \ "ts")
-    val sha = str(j \ "sha")
-    // a lead the line flagged ITSELF was measured here: origin = (ts, sha)
-    val leads = (j \ "suspect_detail") match {
-      case JObject(fields) =>
-        fields.flatMap { case (q, d) =>
-          for {
-            min <- jnum(d \ "min")
-            med <- jnum(d \ "band_median")
-            rerun = jnum(d \ "rerun")
-            open = rerun match {
-              case None    => true // never adjudicated (dirty covariates / rerun failed)
-              case Some(r) => r > SuspectRatio * med && r - med > SuspectFloorSec
-            }
-            if open
-          } yield q -> Lead(min, rerun, Some((ts, sha)))
-        }.toMap
-      case _ => Map.empty[String, Lead]
-    }
-    // A lead this line inherited but could NOT adjudicate (its verdict
-    // is null: the query failed or didn't run here) stays open with its
-    // ORIGINAL evidence — otherwise a clean line that merely failed to
-    // run the query would silently close a potential regression lead
-    // (this line becomes the cohort's most recent comparable line, and
-    // without the carry-forward the next run would find nothing open).
-    // Origin rides per-lead (`origin` in the entry) and is preserved
-    // verbatim or stays None — NEVER backfilled from the carrier's
-    // prior_suspect_src: for a first-hop carry that src is where the
-    // evidence was measured, but for a deeper pre-vintage chain it is a
-    // later carrier, and this line cannot tell the two apart. Writing
-    // the guess as `origin` would launder it into measured-here
-    // provenance that every later hop then preserves "verbatim"; a
-    // None origin is honest, and the history tool displays the src as
-    // its best-effort pointer without the line asserting it. A line's
-    // own suspect_detail wins on overlap: fresher evidence.
-    val carried = (j \ "prior_suspect") match {
-      case JObject(fields) =>
-        fields.flatMap { case (q, d) =>
-          (d \ "verdict") match {
-            case JString(_) => None // refuted or confirmed: adjudicated here
-            case _ => jnum(d \ "prior_min").map(m =>
-              q -> Lead(m, jnum(d \ "prior_rerun"), tsSha(d \ "origin")))
-          }
-        }.toMap
-      case _ => Map.empty[String, Lead]
-    }
-    PriorLine(ts, sha, carried ++ leads)
-  }
-
-  /** The prior line's open leads: ts, sha, and for each suspect that did
-    * NOT self-clear (rerun absent, or rerun still over ratio+floor vs
-    * the band median recorded on that line), its min and rerun —
-    * including leads the line carried forward unadjudicated (its
-    * `prior_suspect` verdict null). None when the line isn't
-    * cohort-comparable; Some with an empty map when it is but has
-    * nothing open (including a self-cleared suspect — that lead is
-    * already settled as weather, on its own line). */
-  private[graft] def openLeadsOf(line: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean): Option[PriorLine] =
-    parseComparable(line, cpus, sfNum, headlineOrdered).map(leadsOfJson)
-
-  /** The open leads of the LAST cohort-comparable line in the history
-    * file — the "next comparable line" rule needs exactly the adjacent
-    * one: an older lead was adjudicated by an intervening comparable
-    * line, re-fired there (making THAT the adjacent lead), or rides
-    * forward in its `prior_suspect` block with a null verdict (the
-    * carry-forward above). Missing/unreadable file → None, never
-    * fatal. */
-  private[graft] def lastOpenLeads(path: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean): Option[PriorLine] =
-    scanHistory(path, cpus, sfNum, headlineOrdered)._2
-
-  /** ONE pass over the history file collecting everything a bench run
-    * needs from it: every comparable line's per-query mins (the bands),
-    * the last comparable line's open leads, and the last
-    * reference-grade line (see [[CleanRef]] — comparable AND
-    * failed/suspect-free, the `last_clean` target; the lead line and
-    * the reference line are often different lines, because an open
-    * lead is precisely a headline not to trust). With an applicable
-    * anchor `band` (same (cpus, sf) cohort), the most recent IN-BAND
-    * reference-grade line is preferred over a more recent out-of-band
-    * one — a clean suspect-free line from a diffusely-elevated stretch
-    * is a valid measurement but a worse baseline — and every returned
-    * reference discloses its band position (`inBand`). The full lead
-    * parse runs once, on the last comparable line only — per-line work
-    * is the band mins plus the cheap reference check.
-    * Missing/unreadable file → empty band map and no leads/reference,
-    * never fatal. */
-  private[graft] def scanHistory(path: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean,
-      band: Option[AnchorBand] = None)
-      : (Map[String, Seq[Double]], Option[PriorLine], Option[CleanRef]) =
-    try {
-      val applicable = band.filter(b =>
-        b.cpus.contains(cpus) && b.sfNum.exists(s => sfNum.contains(s)))
-      val src = scala.io.Source.fromFile(path)
-      try {
-        val acc = scala.collection.mutable.Map.empty[String, List[Double]]
-        var lastJ: Option[org.json4s.JValue] = None
-        var lastAny: Option[CleanRef] = None
-        var lastIn: Option[CleanRef] = None
-        for (line <- src.getLines();
-             j <- parseComparable(line, cpus, sfNum, headlineOrdered)) {
-          for ((q, m) <- minsOfJson(j)) acc(q) = m :: acc.getOrElse(q, Nil)
-          lastJ = Some(j)
-          cleanRefOfJson(j).foreach { r =>
-            val tagged = r.copy(inBand =
-              applicable.map(b => b.lo <= r.value && r.value <= b.hi))
-            lastAny = Some(tagged)
-            if (tagged.inBand.contains(true)) lastIn = Some(tagged)
-          }
-        }
-        (acc.toMap, lastJ.map(leadsOfJson), lastIn.orElse(lastAny))
-      } finally src.close()
-    } catch { case _: Exception => (Map.empty, None, None) }
-
-  /** Verdict per open lead, from THIS run's evidence: `confirmed` when
-    * this run independently re-flagged the query (same ratio+floor rule
-    * against the same comparable-history band — [[suspectsOf]] is the
-    * single definition of "breached"), `refuted` when it ran in band,
-    * `retired` when the query is no longer in the registry at all (a
-    * renamed/removed query can never be re-measured, and a null verdict
-    * would carry its lead forward on every future line forever — any
-    * non-null verdict closes the carry), None (serialized null:
-    * unadjudicated) when it failed or didn't run this time. A registry
-    * query that didn't fail is always in `best`, so the None branch is
-    * reachable only via `failed` once `registry` is consulted first. */
-  private[graft] def adjudicate(leads: Map[String, Lead],
-      best: Map[String, Double], suspect: Map[String, (Double, Int)],
-      failed: Set[String], registry: Set[String]): Map[String, Option[String]] =
-    leads.map { case (q, _) =>
-      q -> (if (!registry(q)) Some("retired")
-            else if (failed(q) || !best.contains(q)) None
-            else if (suspect.contains(q)) Some("confirmed")
-            else Some("refuted"))
-    }
-
-  /** The prior-lead block for the line's tail: per-query prior evidence
-    * (that line's min and repeated/absent rerun), the `origin` line
-    * where that evidence was measured (ts, sha — preserved verbatim
-    * through carry-forward hops so a bisect starts from the right
-    * commit; null only for origin-less pre-vintage leads), this run's
-    * min (null if it failed), and the verdict; plus a src object naming
-    * the adjudicated line (ts, sha) and whether this run is a fresh JVM
-    * relative to it (a same-process repeat can clear a JIT/GC
-    * transient, but only a fresh process is regression-grade
-    * refutation). `"prior_suspect":{},"prior_suspect_src":null` when
-    * there was nothing open. */
-  private[graft] def priorSuspectJson(
-      leads: Map[String, Lead],
-      src: Option[(String, String)], freshJvm: Boolean,
-      best: Map[String, Double],
-      verdicts: Map[String, Option[String]]): String = {
-    // jsonStr on the names, jsonNum on the numbers: unlike the suspect
-    // block's (registry identifiers, this run's own timings), these came
-    // from PARSED history — a mangled or hand-edited line with a quote
-    // in a key or a 1e999 value must not make THIS line invalid JSON
-    // (which the next run would then silently discard).
-    val body = leads.toSeq.sortBy(_._1).map { case (q, Lead(pMin, pRerun, origin)) =>
-      val originJson = origin.map { case (ts, sha) =>
-        s"""{"ts":${jsonStr(ts)},"sha":${jsonStr(sha)}}"""
-      }.getOrElse("null")
-      s"""${jsonStr(q)}:{"prior_min":${jsonNum(pMin)},""" +
-        s""""prior_rerun":${pRerun.map(jsonNum).getOrElse("null")},""" +
-        s""""origin":$originJson,""" +
-        s""""min":${best.get(q).map(jsonNum).getOrElse("null")},""" +
-        s""""verdict":${verdicts.get(q).flatten.map("\"" + _ + "\"").getOrElse("null")}}"""
-    }.mkString("{", ",", "}")
-    val srcJson = src.map { case (ts, sha) =>
-      s"""{"ts":${jsonStr(ts)},"sha":${jsonStr(sha)},"fresh_jvm":$freshJvm}"""
-    }.getOrElse("null")
-    s""""prior_suspect":$body,"prior_suspect_src":$srcJson"""
-  }
-
-  /** The chosen reference-grade history line (see [[CleanRef]]) as
-    * `{"value":…,"ts":…,"sha":…,"jvm_run":…,"in_band":…}`, `null` when
-    * none exists — the trusted number a reader of a distrusted line
-    * needs. jvm_run discloses warm-repeat provenance (a warm repeat
-    * and a cold fresh run are different reference points); in_band
-    * discloses the reference's own position against the anchor band
-    * (false = best available baseline is itself out of band — e.g.
-    * every clean line of a diffusely-elevated stretch; null = no
-    * applicable band). */
-  private[graft] def lastCleanInner(ref: Option[CleanRef]): String =
-    ref.map(r =>
-      s"""{"value":${jsonNum(r.value)},""" +
-        s""""ts":${jsonStr(r.ts)},"sha":${jsonStr(r.sha)},""" +
-        s""""jvm_run":${r.jvmRun.map(_.toString).getOrElse("null")},""" +
-        s""""in_band":${r.inBand.map(_.toString).getOrElse("null")}}""").getOrElse("null")
-
-  /** Whether THIS run's own headline is reference-grade — the emit gate
-    * for `last_clean`, the same rule [[cleanRefOfJson]] applies when
-    * READING history: comparable covariates AND no failed queries (a
-    * failed run's value is the -1.0 sentinel) AND no suspects (a
-    * flagged query's spiked min stays in the headline sum even when
-    * the rerun self-cleared). Round 19 gated on comparability alone,
-    * so a comparable run with failures or suspects omitted the field /
-    * wrote `last_clean:null` — the same null a genuinely clean run
-    * writes — and the "a line that says don't trust me also names the
-    * trusted number" property failed exactly on the runs whose
-    * headline the CleanRef rule itself distrusts (r19 ADVICE). */
-  private[graft] def referenceGrade(noncmp: Option[Boolean],
-      failed: Set[String], suspect: Set[String]): Boolean =
-    noncmp.contains(false) && failed.isEmpty && suspect.isEmpty
-
-  /** THE single reference-grade gate for `last_clean`, shared by the
-    * history line and BENCH_SUMMARY.json so the two artifacts can never
-    * disagree on when the reference is populated: None on a run whose
-    * own headline is reference-grade (see [[referenceGrade]] — that run
-    * IS the reference), otherwise the serialized reference (or the
-    * literal `null` with no reference-grade history). The two emitters
-    * differ only in presentation — the line omits the field entirely
-    * when reference-grade, the summary writes the key with `null`. */
-  private[graft] def lastCleanValue(refGrade: Boolean,
-      ref: Option[CleanRef]): Option[String] =
-    if (refGrade) None else Some(lastCleanInner(ref))
-
-  /** `"last_clean":…,` — spliced just ahead of the verdict tail on a
-    * run whose own headline is NOT reference-grade (noncomparable true
-    * or unknown, a failed query, or an open suspect): a line whose
-    * headline should not be trusted should also name the trusted
-    * number. The round-18 driver capture (74.16 s storm line) correctly
-    * self-flagged, but finding the 52.45 s clean line on the same code
-    * took a manual BENCH_HISTORY read; the history scan that builds the
-    * bands already parses exactly that line, so the distrusted line now
-    * carries it. Empty on a reference-grade run — that line IS the
-    * reference. */
-  private[graft] def lastCleanField(refGrade: Boolean,
-      ref: Option[CleanRef]): String =
-    lastCleanValue(refGrade, ref).map(v => s""""last_clean":$v,""").getOrElse("")
-
-  // ── Band verdict: clean-but-out-of-band headlines classify themselves ──
-  // The documented anchor band (tools/ANCHOR_BAND.json) is the normal
-  // range for the canonical cohort's headline. When a CLEAN line lands
-  // outside it, a human previously had to run `bench_history.py
-  // --compare --band <band sha> <ts>` to learn what kind of excursion
-  // it was (round 19's 59.36 s @ Δ393: DIFFUSE — shared-resource
-  // contention, steal-invisible). The run now computes the same math at
-  // emit time and carries the verdict itself: DIFFUSE (most queries
-  // moved together — environmental, or the host re-based; on the fast
-  // side, a re-anchor signal), CONCENTRATED (a few specific plans moved
-  // — suspect a plan change), or comparable (the per-query evidence
-  // does not back the headline excursion). Fidelity note, verified on
-  // the round-19 record: the base MUST be the per-query MINIMA across
-  // comparable lines at the band's anchoring sha — exactly --compare
-  // --band's cohort floor. A first cut used the all-history band
-  // MEDIANS already in hand from the suspect scan; medians are
-  // weather-inclusive, which compresses every ratio (the real 59.36 s
-  // line read median 1.20x/84% elevated vs the band-sha minima but
-  // only 1.05x/50% vs medians) and under-classified the exact case
-  // the field exists for.
-
-  /** Classification bars — keep in sync with tools/bench_history.py's
-    * COMPARE_* constants (each side's selftest pins its own copy; the
-    * calibration rationale lives in the tool's module docstring: the
-    * 2026-08-13 diffuse session and the round-14 record). */
-  private[graft] val BandElevated = 1.05
-  private[graft] val BandDiffuseFrac = 0.7
-  private[graft] val BandConcentrated = 1.5
-  /** Base mins under this are timer noise — same 50 ms floor as the
-    * tool's COMPARE_MIN_SEC base-run exclusion. */
-  private[graft] val BandMinSec = 0.05
-
-  /** The documented anchor band, read from tools/ANCHOR_BAND.json
-    * (written by `tools/anchor_bench.sh --reanchor`, carries
-    * provenance). lo/hi must be finite numbers; cpus/sf_num identify
-    * the one cohort the band judges — a verdict is only computed when
-    * they match the run's — and sha names the anchoring commit whose
-    * comparable lines are the --compare base cohort. None on a
-    * missing/garbled file: the bench must never fail because the band
-    * does not exist yet. */
-  private[graft] final case class AnchorBand(lo: Double, hi: Double,
-      cpus: Option[Int], sfNum: Option[Double], sha: Option[String])
-
-  private[graft] def readAnchorBand(
-      path: String = "tools/ANCHOR_BAND.json"): Option[AnchorBand] =
-    try {
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        "UTF-8"))
-      val sha = (j \ "sha") match {
-        case JString(s) if s.nonEmpty => Some(s)
-        case _                        => None
-      }
-      for { lo <- jnum(j \ "lo"); hi <- jnum(j \ "hi") } yield
-        AnchorBand(lo, hi, jnum(j \ "cpus").map(_.toInt),
-          jnum(j \ "sf_num"), sha)
-    } catch { case _: Exception => None }
-
-  /** Per-query minima across the comparable cohort lines at the band's
-    * anchoring sha — `--compare --band`'s base cohort ("the honest
-    * 'this code has run this fast' base", tool docstring). A focused
-    * second pass over the history file, taken ONLY on the rare
-    * clean-and-outside-band path (the scan-cost canary pins a full
-    * pass at ~100 ms; an extra one on an exceptional run is noise).
-    * Empty on a missing file or a sha with no comparable lines. */
-  private[graft] def bandShaMins(path: String, sha: String, cpus: Int,
-      sfNum: Option[Double], headlineOrdered: Boolean): Map[String, Double] =
-    try {
-      import org.json4s._
-      val src = scala.io.Source.fromFile(path)
-      try {
-        val acc = scala.collection.mutable.Map.empty[String, Double]
-        for (line <- src.getLines();
-             j <- parseComparable(line, cpus, sfNum, headlineOrdered)) {
-          val shaOk = (j \ "sha") match {
-            case JString(s) => sha.nonEmpty && s.startsWith(sha)
-            case _          => false
-          }
-          if (shaOk)
-            for ((q, m) <- minsOfJson(j))
-              acc(q) = math.min(m, acc.getOrElse(q, Double.MaxValue))
-        }
-        acc.toMap
-      } finally src.close()
-    } catch { case _: Exception => Map.empty }
-
-  /** One computed band verdict. `side` is above|below; the ratios are
-    * this run's per-query mins over the band-sha cohort minima (base
-    * mins under [[BandMinSec]] are excluded as timer noise);
-    * `cls` is diffuse|concentrated|comparable. */
-  private[graft] final case class BandVerdict(side: String,
-      lo: Double, hi: Double, n: Int, medianRatio: Double,
-      fracUp: Double, fracDown: Double, maxRatio: Double,
-      minRatio: Double, cls: String)
-
-  /** The verdict for THIS run, None unless every gate holds: a band
-    * exists AND its (cpus, sf) cohort is the run's AND the run is
-    * adjudicated clean (a dirty run's covariates already explain the
-    * excursion) AND the headline is a real number outside [lo, hi]
-    * (the -1.0 failed sentinel never classifies) AND the band-sha base
-    * cohort is non-empty. `baseMins` is by-name so the focused history
-    * pass only happens once the cheap gates have passed. The class
-    * bars mirror tools/bench_history.py `classify` exactly on the
-    * above side and its reciprocal on the below side: diffuse = most
-    * ratios past the bar in the excursion's direction with the median
-    * along (vs the cohort FLOOR, so below-side diffuse means faster
-    * than the anchor cohort ever ran — the strong re-base signal);
-    * concentrated = a calm median but at least one plan past the
-    * [[BandConcentrated]] bar; comparable otherwise. */
-  private[graft] def bandVerdict(value: Double, noncmp: Option[Boolean],
-      band: Option[AnchorBand], cpus: Int, sfNum: Option[Double],
-      best: Map[String, Double],
-      baseMins: => Map[String, Double]): Option[BandVerdict] =
-    band.flatMap { b =>
-      val cohortOk = b.cpus.contains(cpus) &&
-        b.sfNum.exists(s => sfNum.contains(s))
-      val outside = java.lang.Double.isFinite(value) && value >= 0 &&
-        (value < b.lo || value > b.hi)
-      if (!cohortOk || !noncmp.contains(false) || !outside) None
-      else {
-        val base = baseMins
-        val ratios = best.toSeq.flatMap { case (q, v) =>
-          base.get(q).filter(_ >= BandMinSec).map(v / _)
-        }
-        if (ratios.isEmpty) None
-        else {
-          val side = if (value > b.hi) "above" else "below"
-          val med = medianOf(ratios)
-          val fracUp = ratios.count(_ > BandElevated).toDouble / ratios.size
-          val fracDown =
-            ratios.count(_ < 1 / BandElevated).toDouble / ratios.size
-          val cls =
-            if (side == "above") {
-              if (fracUp >= BandDiffuseFrac && med > BandElevated) "diffuse"
-              else if (med <= BandElevated && ratios.max >= BandConcentrated)
-                "concentrated"
-              else "comparable"
-            } else {
-              if (fracDown >= BandDiffuseFrac && med < 1 / BandElevated)
-                "diffuse"
-              else if (med >= 1 / BandElevated &&
-                ratios.min <= 1 / BandConcentrated) "concentrated"
-              else "comparable"
-            }
-          Some(BandVerdict(side, b.lo, b.hi, ratios.size, med, fracUp,
-            fracDown, ratios.max, ratios.min, cls))
-        }
-      }
-    }
-
-  /** Ratios rounded to 4 decimals for the line — full precision is
-    * band-scan noise, not evidence. */
-  private def round4(d: Double): Double = math.rint(d * 10000) / 10000
-
-  /** `"band_verdict":{…}` or `"band_verdict":null` — side/class splice
-    * bare (fixed internal vocabularies), numbers via [[jsonNum]]. Rides
-    * with the verdict tail so a truncated capture keeps it. */
-  private[graft] def bandVerdictJson(v: Option[BandVerdict]): String =
-    v.map { b =>
-      s""""band_verdict":{"side":"${b.side}","band_lo":${jsonNum(b.lo)},""" +
-        s""""band_hi":${jsonNum(b.hi)},"n":${b.n},""" +
-        s""""median_ratio":${jsonNum(round4(b.medianRatio))},""" +
-        s""""frac_up":${jsonNum(round4(b.fracUp))},""" +
-        s""""frac_down":${jsonNum(round4(b.fracDown))},""" +
-        s""""max_ratio":${jsonNum(round4(b.maxRatio))},""" +
-        s""""min_ratio":${jsonNum(round4(b.minRatio))},""" +
-        s""""class":"${b.cls}"}"""
-    }.getOrElse(""""band_verdict":null""")
-
-  /** The complete machine-readable twin of the stdout line, written to
-    * BENCH_SUMMARY.json (overwritten per run, like BENCH_FULL.json).
-    * Every per-round BENCH_rN.json the driver has ever captured is a
-    * tail-truncated STRING (`parsed:null`) — the verdict-bearing fields
-    * survive only because they ride tail-most. This artifact drops the
-    * bulk diagnostics (samples/unordered live in BENCH_FULL.json and
-    * the history) and keeps everything verdict-bearing, small enough to
-    * never truncate: provenance (ts/sha/jvm_run), cohort
-    * (mode/cpus/sf_num), headline (value/failed), the full suspect and
-    * prior-lead adjudication blocks, the band verdict, `last_clean`
-    * (populated exactly when the line carries it — run not
-    * reference-grade — else null), and the verdict tail. Shape pinned
-    * by BenchSuspectSpec. */
-  private[graft] def summaryJson(ts: String, sha: String, jvmRun: Int,
-      mode: String, cpus: Int, sfDir: String, total: Double,
-      failedJson: String, suspectBlock: String, priorBlock: String,
-      bandBlock: String, refGrade: Boolean, noncmp: Option[Boolean],
-      ref: Option[CleanRef], stealD: Option[Long]): String =
-    s"""{"ts":${jsonStr(ts)},"sha":${jsonStr(sha)},"jvm_run":$jvmRun,""" +
-      s""""mode":"$mode","cpus":$cpus,""" +
-      s""""sf_num":${sfNumber(sfDir).map(_.toString).getOrElse("null")},""" +
-      s""""value":${jsonNum(total)},"failed":$failedJson,""" +
-      s"""$suspectBlock,$priorBlock,$bandBlock,""" +
-      s""""last_clean":${lastCleanValue(refGrade, ref).getOrElse("null")},""" +
-      s"""${verdictFields(stealD, noncmp)}}"""
-
-  /** Best-effort numeric scale factor parsed from the testdata dir name
-    * (`…/sf0.1` → 0.1) so cross-round history filtering doesn't parse
-    * paths; None (serialized null) when the path has no `sf<number>`. */
+  /** Numeric scale factor parsed from the testdata dir name (`…/sf0.1` →
+    * 0.1); None (serialized null) when the path has no `sf<number>`. */
   private[graft] def sfNumber(dir: String): Option[Double] =
     """sf([0-9]*\.?[0-9]+)""".r.findFirstMatchIn(dir)
       .flatMap(m => m.group(1).toDoubleOption)
 
-  /** Minimal JSON string encoder for values spliced into the hand-built
-    * bench line (the bench deliberately carries no JSON dependency).
-    * Escapes the two structural characters plus control chars, so an
-    * sfDir containing a quote or backslash yields a syntactically valid
-    * BENCH_FULL.json / history line instead of silently corrupt JSON. */
+  /** JSON string literal: escapes quotes, backslashes and control chars,
+    * so an sfDir containing `"` or `\` still yields a valid line. */
   private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"'          => "\\\""
@@ -807,337 +54,81 @@ object Bench {
       case c            => c.toString
     } + "\""
 
-  /** The bench line's leading provenance fields, extracted so the spec
-    * can pin the serialization contracts: `cpus` is a JSON NUMBER (the
-    * history tooling compares loadavg against it arithmetically; round-13
-    * lines carried it as a string, which tools/bench_history.py still
-    * accepts for back-compat), `sf` survives a hostile path via
-    * [[jsonStr]], and — since round 15 — the load covariates ride in the
-    * line ITSELF (`load_start`/`load_end`, same keys the history splice
-    * used through round 14, so the tooling reads either vintage
-    * unchanged) instead of only in BENCH_HISTORY.jsonl. `mode` is
-    * env-validated against a fixed safe set before this is called, so it
-    * splices bare. */
-  private[graft] def lineHead(mode: String, cpus: Int, sfDir: String,
-                              covStart: String, covEnd: String): String =
-    s""""metric":"total","unit":"sec","mode":"$mode","cpus":$cpus,""" +
-      s""""sf":${jsonStr(sfDir)},"sf_num":${sfNumber(sfDir).map(_.toString).getOrElse("null")},""" +
-      s""""load_start":$covStart,"load_end":$covEnd"""
+  /** The line's leading fields: `cpus` a JSON number, `sf` escaped by
+    * [[jsonStr]], `sf_num` parsed from it (null when absent). */
+  private[graft] def lineHead(cpus: Int, sfDir: String): String =
+    s""""metric":"total","unit":"sec","cpus":$cpus,"sf":${jsonStr(sfDir)},""" +
+      s""""sf_num":${sfNumber(sfDir).map(_.toString).getOrElse("null")}"""
 
-  /** The line's trailing self-adjudication fields — the computed steal
-    * delta and [[nonComparable]] verdict. These go AFTER `value`, at the
-    * very end of the line, because the driver's per-round artifact keeps
-    * only the line's TAIL: round 14's BENCH_r14.json (106.1s at steal
-    * delta 4436) carried no visible steal evidence and read as a 2x
-    * regression until cross-referenced against BENCH_HISTORY.jsonl by
-    * timestamp. With these two fields tail-most, any truncation that
-    * preserves the headline also preserves the flag that says whether
-    * the headline is comparable. */
-  private[graft] def verdictFields(stealD: Option[Long],
-                                   noncmp: Option[Boolean]): String =
-    s""""steal_delta":${stealD.map(_.toString).getOrElse("null")},""" +
-      s""""noncomparable":${noncmp.map(_.toString).getOrElse("null")}"""
-
-  /** The BENCH_HISTORY line: provenance prefix (timestamp, git sha,
-    * same-JVM run index) spliced ahead of the stdout line's own fields.
-    * Through round 14 this also spliced the load covariates; they now
-    * live in the bench line itself (see [[lineHead]]) under the same
-    * top-level keys, so history lines of either vintage parse
-    * identically. Shape pinned by BenchHistorySpec. */
-  private[graft] def historyLine(line: String, ts: String, sha: String,
-                                 jvmRun: Int): String =
-    s"""{"ts":"$ts","sha":"$sha","jvm_run":$jvmRun,${line.drop(1)}"""
-
-  /** CLI parse: `[sfDir] [--repeat N]` → (positional dir, repeat count).
-    * The positional dir overrides SPARK_GRAFT_SF_DIR; --repeat runs the
-    * whole suite N times in this one JVM, each run appending its own
-    * history line — the adjudication protocol's ">=2 fresh runs" as a
-    * single command. Unknown flags, a missing/garbage count, and a
-    * duplicate positional fail loudly: a driver typo must never
-    * silently bench the wrong dir once. Pinned by BenchHistorySpec. */
-  private[graft] def parseArgs(args: Array[String]): (Option[String], Int) = {
-    var dirArg: Option[String] = None
-    var repeat = 1
-    var i = 0
-    while (i < args.length) {
-      args(i) match {
-        case "--repeat" =>
-          require(i + 1 < args.length, "--repeat needs a count")
-          repeat = args(i + 1).toIntOption.getOrElse(
-            sys.error(s"--repeat must be an integer >= 1, got '${args(i + 1)}'"))
-          require(repeat >= 1, s"--repeat must be >= 1, got $repeat")
-          i += 2
-        case flag if flag.startsWith("--") => sys.error(s"unknown flag '$flag'")
-        case dir =>
-          require(dirArg.isEmpty, s"duplicate positional arg '$dir'")
-          dirArg = Some(dir); i += 1
-      }
-    }
-    (dirArg, repeat)
+  /** Time one query: DataFrame construction through the last row
+    * reaching the noop sink. noop, not count(): count() lets Catalyst
+    * prune every computed column and drop unlimited sorts; the noop
+    * writer materializes each row fully at zero sink cost. */
+  private def once(spark: SparkSession, sfDir: String, fn: Query): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
   }
 
-  def main(args: Array[String]): Unit = {
-    // Repeats share the JVM (JIT/page-cache warm), which the history
-    // records via jvm_run so a reader never mistakes a warm repeat for
-    // a cold fresh invocation.
-    val (dirArg, repeat) = parseArgs(args)
-    val sfDir = dirArg.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    // parsed up front: the history line serializes cpus as a JSON number
-    // (bench_history.py compares loadavg against it), and garbage would
-    // otherwise surface as an opaque failure inside SparkSession.builder
-    val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpus = cpusRaw.toIntOption.getOrElse(
-      sys.error(s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$cpusRaw'"))
-    require(cpus >= 1, s"SPARK_GRAFT_CPUS must be >= 1, got $cpus")
-    val roundsRaw = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3")
-    // validate up front: rounds=0 would print a perfect-looking 0.0 total
-    // with an empty query map, and garbage would die as a bare
-    // NumberFormatException deep in the run
-    val rounds = roundsRaw.toIntOption.getOrElse(
-      sys.error(s"SPARK_GRAFT_BENCH_ROUNDS must be an integer >= 1, got '$roundsRaw'"))
-    require(rounds >= 1, s"SPARK_GRAFT_BENCH_ROUNDS must be >= 1, got $rounds")
-    // ordered: the query exactly as Verify runs it (trailing determinism
-    // sort included — what the oracle needs); the headline, min over
-    // `rounds` interleaved suite passes, directly comparable round to
-    // round. unordered: the same plan with a trailing global Sort
-    // stripped, isolating operator cost from the determinism tax — ONE
-    // diagnostic pass after the timed rounds (not interleaved: doubling
-    // each round's work measurably inflated the ordered samples ~1.2x).
-    val mode = sys.env.getOrElse("GRAFT_BENCH_MODE", "both")
-    require(Set("ordered", "unordered", "both")(mode),
-      s"GRAFT_BENCH_MODE must be ordered|unordered|both, got '$mode'")
-    // EngineConf.tuned: applies NOTHING by default (the r21 session-wide
-    // AQE coalescing floor was reverted; Tables.spread's explicit
-    // partition count is the sole active widening mechanism). It only
-    // forwards the SPARK_GRAFT_MIN_PARTITION_SIZE env escape hatch —
-    // stage widths only, never what a query computes or how it is timed.
-    val spark = EngineConf.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: touch every table (parquet footers into page cache) and
-    // exercise the common plan shapes once, so the first timed query
-    // doesn't absorb JVM/JIT/codegen startup.
-    Tables.all(spark, sfDir).values.foreach(df => df.limit(1000).agg(count(lit(1))).collect())
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    /** The query re-planned without its trailing determinism sort, plus
-      * whether anything was actually stripped. */
-    def stripSort(df: DataFrame): (DataFrame, Boolean) =
-      withoutTopSort(df.queryExecution.logical) match {
-        case Some(p) => (ColumnBridge.ofRows(spark, p), true)
-        case None    => (df, false)
-      }
-    // noop sink, not count(): count() lets Catalyst prune every computed
-    // column (a projection-heavy query would bench as a bare row scan)
-    // and drop unlimited sorts; the noop writer materializes each row
-    // fully with zero sink cost — the honest per-query number.
-    def once(fn: (SparkSession, String) => DataFrame,
-             ordered: Boolean): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val (run, stripped) = if (ordered) (df, false) else stripSort(df)
-      run.write.format("noop").mode("overwrite").save()
-      ((System.nanoTime() - t0) / 1e9, stripped)
-    }
-    // Interleaved whole-suite rounds, per-query min. The previous
-    // back-to-back best-of-2 produced a phantom >1.3x delta on unchanged
-    // code three rounds running (r6 q08-q13, r7 q13 5.9s, r8 q02 1.66x):
-    // JIT deopt / GC / page-cache noise that hits a query's slot tends to
-    // hit BOTH of its adjacent runs, so min-of-2 kept the outlier.
-    // Running the full suite N times and taking each query's min across
-    // rounds decorrelates the noise — a disturbance in round k lands on a
-    // different query's timing in round k+1. Raw per-round samples are
-    // kept in the JSON (chronological order) so a later reader can
-    // adjudicate noise-vs-regression without re-running.
-    // --repeat: everything below (measurement rounds, diagnostic pass,
-    // line construction, BENCH_FULL overwrite, history append, stdout
-    // line) runs once per repeat, so each repeat is a complete,
-    // independently adjudicable bench run. Warm-up above runs once —
-    // repeat 1 is the cold-est run, later repeats are warmer, which the
-    // history's jvm_run index discloses.
-    // Whether this process has already appended a comparable history
-    // line: a later repeat's prior-lead adjudication then targets its
-    // own predecessor — same JVM, disclosed as fresh_jvm:false (a
-    // same-process repeat can clear a JIT/GC transient, but only a
-    // fresh process is regression-grade evidence).
-    var appendedComparable = false
-    for (jvmRun <- 1 to repeat) {
-    // load covariates bracket the run: read before the first timed round…
-    val loadStart = readLoadAvg()
-    val stealStart = readStealTicks()
-    val covStart = covariateJson(loadStart, stealStart)
-    val headlineOrdered = mode != "unordered"
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-    val samplesUnordered = scala.collection.mutable.Map.empty[String, List[Double]]
-    // Queries whose "unordered" run had no sort to strip — their two
-    // numbers are the same plan, so cohort comparisons must exclude them.
-    val unstripped = scala.collection.mutable.Set.empty[String]
+  /** One suite run: each query's raw per-round timings (chronological),
+    * the queries that threw, and the steal ticks across the timed rounds. */
+  private[graft] final case class Timings(samples: Map[String, Vector[Double]],
+      failed: Set[String], stealDelta: Option[Long])
+
+  /** Warm up, then time [[Rounds]] interleaved passes over `queries`. A
+    * query that throws is dropped from later rounds and from `samples`,
+    * and listed in `failed`. */
+  private[graft] def suite(spark: SparkSession, sfDir: String,
+                           queries: Seq[(String, Query)]): Timings = {
+    // Touch every table (parquet footers into page cache) and exercise
+    // the common plan shapes once, so the first timed query doesn't
+    // absorb JVM/JIT/codegen startup.
+    Tables.all(spark, sfDir).values.foreach(_.limit(1000).agg(count(lit(1))).collect())
+    val steal0 = readStealTicks()
+    var samples = Map.empty[String, Vector[Double]]
     var failed = Set.empty[String]
-    for (r <- 1 to rounds; (name, fn) <- queries if !failed(name)) {
-      try {
-        val (t, stripped) = once(fn, ordered = headlineOrdered)
-        if (!headlineOrdered && !stripped) unstripped += name
-        val into = if (headlineOrdered) samples else samplesUnordered
-        into(name) = t :: into.getOrElse(name, Nil)
-      } catch { case e: Throwable =>
+    for (r <- 1 to Rounds; (name, fn) <- queries if !failed(name)) {
+      try samples += name -> (samples.getOrElse(name, Vector.empty) :+ once(spark, sfDir, fn))
+      catch { case e: Throwable =>
         failed += name
-        samples -= name; samplesUnordered -= name
+        samples -= name
         System.err.println(s"[bench] $name FAILED (round $r): ${e.getMessage}")
       }
     }
-    // The single unordered diagnostic pass (mode=both). One sample —
-    // noisier than the min-of-N headline; compare cohorts, not queries.
-    // Diagnostic-pass failures don't poison the headline (the ordered
-    // rounds already proved the query runs) but MUST be machine-readable:
-    // a silently missing key would skew the documented cohort comparison.
-    var unorderedFailed = Set.empty[String]
-    if (mode == "both") {
-      for ((name, fn) <- queries if !failed(name)) {
-        try {
-          val (t, stripped) = once(fn, ordered = false)
-          if (!stripped) unstripped += name
-          samplesUnordered(name) = t :: Nil
-        } catch { case e: Throwable =>
-          unorderedFailed += name
-          System.err.println(s"[bench] $name unordered FAILED: ${e.getMessage}")
-        }
-      }
-    }
-    // …and again after the last measured pass, bracketing everything the
-    // line's numbers came from: start vs end loadavg (and the steal-tick
-    // delta) shows whether a disturbance spanned the run, and the run
-    // self-adjudicates via the same thresholds the history tooling uses.
-    val loadEnd = readLoadAvg()
-    val stealEnd = readStealTicks()
-    val covEnd = covariateJson(loadEnd, stealEnd)
-    val stealD = stealDeltaOf(stealStart, stealEnd)
-    val noncmp = nonComparable(cpus, loadStart, loadEnd, stealD)
-    val headlineSamples = if (headlineOrdered) samples else samplesUnordered
-    val best = queries.collect {
-      case (name, _) if headlineSamples.contains(name) =>
-        name -> headlineSamples(name).min
-    }
-    // Self-adjudication: flag per-query mins that breach their
-    // comparable-history band, and — when THIS run's covariates are
-    // clean (noncomparable false; on a dirty run the covariates already
-    // explain the breach and a re-run inside the disturbance proves
-    // nothing) — re-run just the flagged queries once so the artifact
-    // carries the settling sample. The re-runs are bracketed by their
-    // own steal delta (rerun_steal_delta) so THEY are adjudicable too.
-    // one pass serves the bands, the prior-lead read, and the
-    // last_clean reference below; the anchor band (also used by the
-    // band verdict further down) steers the reference toward the most
-    // recent IN-BAND reference-grade line
-    val anchorBand = readAnchorBand()
-    val (bands, lastLeads, lastClean) =
-      scanHistory("BENCH_HISTORY.jsonl", cpus, sfNumber(sfDir),
-        headlineOrdered, anchorBand)
-    val suspect = suspectsOf(best.toMap, bands)
-    val rerun: Map[String, Double] =
-      if (suspect.isEmpty || !noncmp.contains(false)) Map.empty
-      else queries.collect { case (name, fn) if suspect.contains(name) =>
-        try Some(name -> once(fn, ordered = headlineOrdered)._1)
-        catch { case _: Throwable => None } // ordered rounds already proved it runs
-      }.flatten.toMap
-    val rerunStealD =
-      if (rerun.isEmpty) None else stealDeltaOf(stealEnd, readStealTicks())
-    // Prior-lead adjudication (the reading rule, automated): does the
-    // most recent comparable line carry suspects its own re-run could
-    // not clear? Only a comparable run adjudicates — a disturbed run's
-    // numbers can neither refute nor confirm, and skipping it leaves
-    // the lead line as the cohort's most recent comparable line, so the
-    // NEXT clean run picks it up instead.
-    val prior =
-      if (!noncmp.contains(false)) None
-      else lastLeads.filter(_.leads.nonEmpty)
-    val priorLeads = prior.map(_.leads).getOrElse(Map.empty[String, Lead])
-    val priorVerdicts = adjudicate(priorLeads, best.toMap, suspect, failed,
-      queries.map(_._1).toSet)
-    def mapJson(m: Map[String, String]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    def samplesJson(m: scala.collection.Map[String, List[Double]]): String =
-      mapJson(m.map { case (k, v) => k -> v.reverse.mkString("[", ",", "]") }.toMap)
-    def namesJson(s: Iterable[String]): String =
-      s.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // failed queries are NOT in the per-query map (a -1.0 sentinel reads
-    // as a duration to anything aggregating or plotting it); they're
-    // enumerated in `failed` and poison the headline total below
-    val qs = mapJson(best.toMap.map { case (k, v) => k -> v.toString })
-    // "unordered" always means "unordered timings": the diagnostic pass
-    // in mode=both, the headline mins themselves in mode=unordered (a
-    // reader of the documented format must not get {} just because the
-    // whole run was unordered), and {} only when no unordered run exists.
-    val unorderedJson =
-      if (mode == "ordered") "{}"
-      else mapJson(samplesUnordered.map { case (k, v) => k -> v.min.toString }.toMap)
-    // headline total = -1 (hard failure) when ANY query failed: summing
-    // only successes would let a slow query "improve" the headline by
-    // breaking outright. Consumers see the failed list either way.
-    val total =
-      if (failed.nonEmpty) -1.0
-      else best.map(_._2).sum
-    // Field order is deliberate: the per-round artifact keeps only the
-    // TAIL of this line, so the bulk diagnostics (samples, unordered)
-    // come first and the verdict-bearing fields come last — truncation
-    // eats diagnostics before it eats the verdict. Tail-most of all are
-    // the run's self-adjudication fields (steal_delta, noncomparable),
-    // so a capture that keeps the headline `value` also keeps the flag
-    // saying whether that value is comparable (the round-14 lesson: a
-    // 106.1s capture at steal delta 4436 read as a 2x regression until
-    // cross-referenced against the history file by hand). The
-    // untruncated line also lands in BENCH_FULL.json.
-    // unstripped minus failed: a query recorded as unstripped in an early
-    // round but failing a later one would otherwise sit in two mutually
-    // inconsistent cohorts (unstripped AND failed-with-no-samples).
-    val suspectBlock = suspectJson(suspect, best.toMap, rerun, rerunStealD)
-    val priorBlock = priorSuspectJson(priorLeads, prior.map(p => (p.ts, p.sha)),
-      !appendedComparable, best.toMap, priorVerdicts)
-    // Clean-but-out-of-band self-classification (the --compare --band
-    // math, run at emit time). The base cohort — per-query minima at
-    // the band's anchoring sha — is a lazy second history pass taken
-    // only when the cheap gates (clean, outside, cohort match) pass.
-    val bandBlock = bandVerdictJson(bandVerdict(total, noncmp,
-      anchorBand, cpus, sfNumber(sfDir), best.toMap,
-      anchorBand.flatMap(_.sha).map(s =>
-        bandShaMins("BENCH_HISTORY.jsonl", s, cpus, sfNumber(sfDir),
-          headlineOrdered)).getOrElse(Map.empty)))
-    val refGrade = referenceGrade(noncmp, failed, suspect.keySet)
-    val line = s"""{${lineHead(mode, cpus, sfDir, covStart, covEnd)},"samples":${samplesJson(headlineSamples)},"unordered":$unorderedJson,"unordered_unstripped":${namesJson(unstripped.toSet -- failed)},"unordered_failed":${namesJson(unorderedFailed)},"queries":$qs,"failed":${namesJson(failed)},"value":$total,$suspectBlock,$priorBlock,$bandBlock,${lastCleanField(refGrade, lastClean)}${verdictFields(stealD, noncmp)}}"""
+    Timings(samples, failed, stealDeltaOf(steal0, readStealTicks()))
+  }
+
+  /** The bench line. `value` is the sum of per-query mins, or -1 when
+    * any query failed: summing only successes would let a slow query
+    * "improve" the headline by breaking outright. */
+  private[graft] def line(cpus: Int, sfDir: String, t: Timings): String = {
+    val byName = t.samples.toSeq.sortBy(_._1)
+    val mins = byName.map { case (q, ts) => q -> ts.min }
+    val value = if (t.failed.nonEmpty) -1.0 else mins.map(_._2).sum
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
+    val samplesJson = obj(byName.map { case (q, ts) => q -> ts.mkString("[", ",", "]") })
+    val queriesJson = obj(mins.map { case (q, m) => q -> m.toString })
+    val failedJson = t.failed.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")
+    s"""{${lineHead(cpus, sfDir)},"samples":$samplesJson,"queries":$queriesJson,""" +
+      s""""failed":$failedJson,"value":$value,""" +
+      s""""steal_delta":${t.stealDelta.map(_.toString).getOrElse("null")}}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length <= 1, s"usage: graft.Bench [sfDir], got ${args.mkString(" ")}")
+    val sfDir = args.headOption.getOrElse(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusRaw.toIntOption.filter(_ >= 1).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$cpusRaw'"))
+    val spark = EngineConf.local(cpus)
+    val out = line(cpus, sfDir, suite(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)))
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
-      try w.println(line) finally w.close()
+      try w.println(out) finally w.close()
     } catch { case _: Exception => () } // stdout is the contract; the file is best-effort
-    val ts = java.time.Instant.now.toString
-    val sha = gitHeadSha().getOrElse("unknown")
-    // The small complete twin the driver CAN parse (its BENCH_rN capture
-    // is a tail-truncated string): everything verdict-bearing, none of
-    // the bulk. Overwritten per run; with --repeat the last repeat wins,
-    // and jvm_run discloses which repeat is on the record.
-    try {
-      val w = new java.io.PrintWriter("BENCH_SUMMARY.json")
-      try w.println(summaryJson(ts, sha, jvmRun, mode, cpus, sfDir, total,
-        namesJson(failed), suspectBlock, priorBlock, bandBlock, refGrade,
-        noncmp, lastClean, stealD))
-      finally w.close()
-    } catch { case _: Exception => () }
-    // Cross-round adjudication needs more than one run's raw samples,
-    // but BENCH_FULL.json is overwritten per run and the driver's
-    // BENCH_rN artifact keeps only the line's tail. Append the full
-    // line (wall-clock-stamped) to a history log nothing overwrites.
-    try {
-      val w = new java.io.FileWriter("BENCH_HISTORY.jsonl", true)
-      try w.write(historyLine(line, ts, sha, jvmRun) + "\n")
-      finally w.close()
-      // only after a successful append: a failed write leaves the prior
-      // comparable line foreign-process, so fresh_jvm must stay true
-      if (noncmp.contains(false)) appendedComparable = true
-    } catch { case _: Exception => () }
-    println(line)
-    } // for jvmRun
+    println(out)
     spark.stop()
   }
 }

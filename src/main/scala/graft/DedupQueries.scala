@@ -486,23 +486,8 @@ object DedupQueries {
     // this corpus: the planted dups are all cross-source, see
     // bigramPairs scaladoc). Returned pairs are the same-lang subset of
     // d53's; DedupSpec asserts exactly that.
-    // Cost profile (warm, sf0.1, noop sink): ordered min ~2.4-3.4s,
-    // unordered ~2.0-2.7s (BENCH_HISTORY.jsonl 02:55Z/02:59Z and
-    // sha 0eddb4a 04:13Z/04:17Z). Adjudicated (round 12): the 03:20Z
-    // run's ordered samples hit 5.4/7.0/6.3s — ALL interleaved slots
-    // at once — against an unchanged plan, while the SAME run's
-    // unordered pass sat at 1.96s, in profile; two fresh runs came
-    // back at ordered mins 2.41s/2.37s, unordered 1.98s/1.97s. That is
-    // the sustained-VM-disturbance noise mode adjudicated for d57
-    // below; same rule: adjudicate any future elevation from >=2
-    // history runs before touching the plan. Since round 13 the
-    // history lines carry load_start/load_end (loadavg + steal ticks)
-    // — read those FIRST: a steal delta or an out-of-profile loadavg
-    // is one-run evidence, and `Bench <dir> --repeat 2` runs the
-    // two-run protocol as a single command when covariates are clean.
-    // Since round 14 tools/bench_history.py applies the thresholds
-    // itself: a trailing `!` marks a run as non-comparable, so start
-    // triage from the rendered table, not from remembered numbers.
+    // Cost profile (warm, sf0.1, noop sink): min ~2.4-3.4s, ~2.0-2.7s
+    // with the trailing determinism sort removed.
     QueryDef("d58_blocked_composed",
       (s, dir) => bigramPairs(s, dir, Seq("lang")).orderBy("doc_a", "doc_b"),
       Some(duckBigramPairsSql(Seq("lang")))),
@@ -532,16 +517,6 @@ object DedupQueries {
     // the scan (3.9 -> ~1.4s); r22 pins the rare-posting frame too — the
     // optimized plan still carried FOUR copies of the df aggregate, one
     // per consumer branch (see rex below).
-    // Adjudicated (round 11): one bench round's ordered samples hit
-    // 7.4/10.3/12.5s against an unchanged plan — two immediately
-    // subsequent runs (BENCH_HISTORY.jsonl 2026-08-13T02:55/02:59Z)
-    // came back at ordered mins 4.12s/3.89s with unordered 4.39s/3.95s,
-    // matching this profile. That is the sustained-VM-disturbance noise
-    // mode (hits all of a query's interleaved slots at once — the one
-    // mode interleaving can't decorrelate); adjudicate any future
-    // elevation from >=2 history runs before touching the plan — and
-    // since round 13, check the history line's load_start/load_end
-    // covariates (loadavg + steal ticks) first; see the d58 note.
     QueryDef("d57_containment",
       (s, dir) => {
         val MAXDF = 25

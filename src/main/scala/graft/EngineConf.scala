@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level performance configuration shared by every runner main
-  * (Bench, Verify, Probe, PlanAudit). Nothing here changes what any query
-  * computes — only how wide its stages execute.
+/** Session construction shared by every runner main (Bench, Verify,
+  * Probe, PlanAudit, PlanDump): [[local]] builds the session, and
+  * [[tuned]] holds its performance settings, which never change what a
+  * query computes — only how wide its stages execute.
   *
-  * By default this applies NOTHING: stock AQE coalescing is kept. An
-  * earlier r21 iteration lowered the session-wide AQE coalescing floor
+  * [[tuned]] applies NOTHING by default: stock AQE coalescing is kept.
+  * An earlier r21 iteration lowered the session-wide AQE coalescing floor
   * (`coalescePartitions.minPartitionSize`) to 16k so the CPU-dense
   * tiny-byte dedup stages stayed wide — it worked for those, but a BYTE
   * floor cannot tell CPU-dense shuffles from cheap ones (the events/
@@ -28,4 +29,18 @@ object EngineConf {
         b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
       case None => b
     }
+
+  /** A local session `cpus` wide: `local[cpus]`, one shuffle partition
+    * per core, UTC session time (event-time math must not depend on the
+    * host zone), no UI, WARN logging, and [[tuned]] applied. */
+  def local(cpus: Int): SparkSession = {
+    val spark = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -11,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = EngineConf.tuned(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.local(8)
 
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // Per-query isolation: one broken query must not abort the audit of

@@ -1,12 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes each declared query's `.explain("formatted")` output to
   * `<outDir>/<query><suffix>.txt` — the optimization round's plan
-  * evidence (plans/r21, the _before/_after pairs). Self-contained on
-  * purpose: it must compile against the pre-optimization tree too, so
-  * the before/after pair comes from the same tool.
+  * evidence (plans/r21, the _before/_after pairs).
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [sfDir] [query...]
   */
@@ -16,12 +12,7 @@ object PlanDump {
     val suffix = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val names = if (args.length > 3) args.drop(3).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineConf.local(32)
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if names.isEmpty || names(name)) {

@@ -153,21 +153,28 @@ object Tables {
     if (plannedParallelism(df) < want) df.repartition(want, keys: _*) else df
   }
 
-  /** The frame's planned scan parallelism, read from the physical plan's
-    * `FileSourceScanExec` split count — NOT from `df.rdd`, which builds a
-    * whole second QueryExecution (a DeserializeToObject wrapper over the
-    * plan) plus the full executed-plan RDD chain, all thrown away after
-    * the read (r21 ADVICE). Every spread call site passes a bare table
-    * scan, so the scan's split count IS the frame's parallelism; the
-    * `toRdd` fallback (same planning, no deserializer re-plan) covers any
-    * future non-scan caller. Plan-only either way: no job runs. */
+  /** The frame's planned parallelism. For a plan whose only leaf is one
+    * `FileSourceScanExec` with no exchange or coalesce above it (every
+    * spread call site: a bare table scan), that is the scan's split
+    * count, read from the physical plan — NOT from `df.rdd`, which builds
+    * a whole second QueryExecution (a DeserializeToObject wrapper over
+    * the plan) plus the full executed-plan RDD chain, all thrown away
+    * after the read. Anything else (a repartitioned or coalesced scan, a
+    * join, a union) sets its own width above the scan, so it falls back
+    * to `toRdd` (same planning, no deserializer re-plan). Plan-only
+    * either way: no job runs. */
   private def plannedParallelism(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.sparkPlan
+    val reshaped = plan.exists {
+      case _: Exchange | _: CoalesceExec => true
+      case _ => false
     }
-    if (scans.nonEmpty) scans.sum
-    else df.queryExecution.toRdd.getNumPartitions
+    plan.collectLeaves() match {
+      case Seq(scan: FileSourceScanExec) if !reshaped => scan.inputRDD.getNumPartitions
+      case _ => df.queryExecution.toRdd.getNumPartitions
+    }
   }
 
   /** Lazy within-query materialization of a multiply-consumed derived

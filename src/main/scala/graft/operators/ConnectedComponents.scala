@@ -70,10 +70,16 @@ object ConnectedComponents {
       .as[(Long, Long)].head()
   }
 
+  /** Alternating-round budget. Even, because the loop runs two rounds
+    * per iteration: the bound is exact, never overshot by one. */
+  private val MaxRounds = 50
+
   /** Resolve components of an undirected edge list `(src, dst)`.
     * Returns (`(doc_id, cluster_id)` labels for every node incident to an
-    * edge, rounds taken). Fails loudly past `maxIter` — a silent cap
-    * would ship labels that aren't the component minimum.
+    * edge, rounds taken). Contract: at most 50 alternating rounds, and
+    * the reported count is always even (rounds run in pairs, see the
+    * loop). Fails loudly past 50 — a silent cap would ship labels that
+    * aren't the component minimum.
     *
     * Each round ends in `localCheckpoint`, NOT `cache`: a round
     * references the previous round's frame several times (both union
@@ -85,7 +91,7 @@ object ConnectedComponents {
     * Superseded round RDDs are unpersisted by the ContextCleaner once
     * unreferenced; on a real cluster with executor churn, swap in
     * `checkpoint()` against a reliable dir — same dataflow. */
-  def runWithRounds(edges0: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
+  def runWithRounds(edges0: DataFrame): (DataFrame, Int) = {
     var cur = edges0.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct().localCheckpoint(false)
@@ -115,7 +121,7 @@ object ConnectedComponents {
     cur = rightsize(cur, curFp._1)
     var rounds = 0
     var converged = curFp._1 == 0
-    while (!converged && rounds < maxIter) {
+    while (!converged && rounds < MaxRounds) {
       // TWO alternating rounds per fingerprint job (r22): the loop was
       // scheduling-latency-bound at small edge volumes (one fingerprint
       // job per round), and the convergence argument only needs SOME
@@ -151,7 +157,7 @@ object ConnectedComponents {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connected components did not converge in $maxIter alternating rounds")
+        s"connected components did not converge in $MaxRounds alternating rounds")
     assertStarForest(cur)
     // Stars are (member, component-min); the min labels itself. The final
     // checkpointed frame stays referenced by the returned labels, so its
@@ -162,8 +168,7 @@ object ConnectedComponents {
   }
 
   /** Labels only; see [[runWithRounds]]. */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame =
-    runWithRounds(edges, maxIter)._1
+  def run(edges: DataFrame): DataFrame = runWithRounds(edges)._1
 
   /** Safety net for the star-forest invariant the labels depend on: at
     * the fixed point no node may appear on both sides of an edge

@@ -4,13 +4,12 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the BENCH_HISTORY provenance additions: the machine-load
-  * covariates (/proc/loadavg + /proc/stat steal ticks at run start and
-  * end), the numeric `sf_num`, the `jvm_run` repeat index, and the
-  * composed history-line shape. These exist so a VM-disturbance
-  * adjudication (the d57/d58 two-fresh-runs protocol) reads as one-run
-  * evidence straight off the history line — a shape drift would silently
-  * break every future adjudication, so the shape is spec-pinned. */
+/** Pins the bench line's provenance helpers — the steal-tick reader
+  * behind `steal_delta`, the numeric `sf_num`, JSON escaping and the
+  * line head — and the retired history-line helpers still kept in
+  * [[BenchLegacy]] (loadavg covariates, the comparability verdict and
+  * the history-line splice). A shape drift in the live helpers would
+  * silently corrupt the line the driver parses. */
 class BenchHistorySpec extends AnyFunSuite {
 
   private def tmpFile(content: String): String = {
@@ -21,12 +20,12 @@ class BenchHistorySpec extends AnyFunSuite {
 
   test("readLoadAvg parses the three averages from a loadavg line") {
     val p = tmpFile("0.52 1.10 2.00 1/123 4567\n")
-    assert(Bench.readLoadAvg(p) === Some((0.52, 1.10, 2.00)))
+    assert(BenchLegacy.readLoadAvg(p) === Some((0.52, 1.10, 2.00)))
   }
 
   test("readLoadAvg is None on a missing or malformed file") {
-    assert(Bench.readLoadAvg("/no/such/file").isEmpty)
-    assert(Bench.readLoadAvg(tmpFile("not numbers here\n")).isEmpty)
+    assert(BenchLegacy.readLoadAvg("/no/such/file").isEmpty)
+    assert(BenchLegacy.readLoadAvg(tmpFile("not numbers here\n")).isEmpty)
   }
 
   test("readStealTicks takes field 8 of the aggregate cpu line") {
@@ -47,7 +46,7 @@ class BenchHistorySpec extends AnyFunSuite {
     // on — this suite runs there, so pin that both reads actually work
     // (skipping silently on a non-Linux dev box)
     if (java.nio.file.Files.exists(java.nio.file.Paths.get("/proc/loadavg"))) {
-      val load = Bench.readLoadAvg()
+      val load = BenchLegacy.readLoadAvg()
       assert(load.isDefined, "/proc/loadavg must parse")
       val (a, b, c) = load.get
       assert(a >= 0 && b >= 0 && c >= 0)
@@ -56,9 +55,9 @@ class BenchHistorySpec extends AnyFunSuite {
   }
 
   test("covariateJson shape: loadavg triple + steal ticks, null when absent") {
-    assert(JsonMethods.parse(Bench.covariateJson(Some((0.5, 0.25, 0.125)), Some(42L)))
+    assert(JsonMethods.parse(BenchLegacy.covariateJson(Some((0.5, 0.25, 0.125)), Some(42L)))
       === JsonMethods.parse("""{"loadavg":[0.5,0.25,0.125],"steal_ticks":42}"""))
-    assert(JsonMethods.parse(Bench.covariateJson(None, None))
+    assert(JsonMethods.parse(BenchLegacy.covariateJson(None, None))
       === JsonMethods.parse("""{"loadavg":null,"steal_ticks":null}"""))
   }
 
@@ -69,20 +68,6 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(Bench.sfNumber("/tmp/data") === None)
   }
 
-  test("parseArgs: positional dir and --repeat compose; garbage fails loudly") {
-    assert(Bench.parseArgs(Array.empty) === ((None, 1)))
-    assert(Bench.parseArgs(Array("/data/sf1")) === ((Some("/data/sf1"), 1)))
-    assert(Bench.parseArgs(Array("--repeat", "3")) === ((None, 3)))
-    assert(Bench.parseArgs(Array("/d", "--repeat", "2")) === ((Some("/d"), 2)))
-    assert(Bench.parseArgs(Array("--repeat", "2", "/d")) === ((Some("/d"), 2)))
-    // a driver typo must never silently bench the wrong thing once
-    intercept[RuntimeException](Bench.parseArgs(Array("--repeat")))
-    intercept[RuntimeException](Bench.parseArgs(Array("--repeat", "zero")))
-    intercept[IllegalArgumentException](Bench.parseArgs(Array("--repeat", "0")))
-    intercept[RuntimeException](Bench.parseArgs(Array("--rounds", "3")))
-    intercept[IllegalArgumentException](Bench.parseArgs(Array("/a", "/b")))
-  }
-
   test("jsonStr escapes quotes, backslashes, and control chars") {
     assert(Bench.jsonStr("/root/testdata/sf0.1") === "\"/root/testdata/sf0.1\"")
     assert(JsonMethods.parse(s"""{"sf":${Bench.jsonStr("a\"b\\c\nd")}}""")
@@ -90,28 +75,17 @@ class BenchHistorySpec extends AnyFunSuite {
   }
 
   test("lineHead: cpus is a JSON number; a hostile sfDir stays valid JSON") {
-    // round-13 lines carried "cpus":"32" (string); the adjudication
-    // tooling compares loadavg against cpus arithmetically, so from
-    // round 14 the line carries a number — this test is the pin
-    val cov0 = Bench.covariateJson(Some((1.0, 2.0, 3.0)), Some(7L))
-    val cov1 = Bench.covariateJson(Some((4.0, 5.0, 6.0)), Some(9L))
-    val parsed = JsonMethods.parse(
-      "{" + Bench.lineHead("both", 32, "/root/testdata/sf0.1", cov0, cov1) + "}")
+    // round-13 lines carried "cpus":"32" (string); readers compare it
+    // arithmetically, so the line carries a number — this test is the pin
+    val parsed = JsonMethods.parse("{" + Bench.lineHead(32, "/root/testdata/sf0.1") + "}")
     assert(parsed \ "cpus" === JInt(32))
     assert(parsed \ "metric" === JString("total"))
-    assert(parsed \ "mode" === JString("both"))
+    assert(parsed \ "unit" === JString("sec"))
     assert(parsed \ "sf" === JString("/root/testdata/sf0.1"))
     assert(parsed \ "sf_num" === JDouble(0.1))
-    // round 15: the covariates ride in the line itself, under the SAME
-    // top-level keys the round-13/14 history splice used — the history
-    // tooling must keep reading both vintages unchanged
-    assert(parsed \ "load_start" \ "loadavg" === JArray(List(
-      JDouble(1.0), JDouble(2.0), JDouble(3.0))))
-    assert(parsed \ "load_start" \ "steal_ticks" === JInt(7))
-    assert(parsed \ "load_end" \ "steal_ticks" === JInt(9))
     // a dir with JSON structural chars must round-trip, not corrupt the line
     val hostile = JsonMethods.parse(
-      "{" + Bench.lineHead("ordered", 8, "/tmp/we\"ird\\dir", cov0, cov1) + "}")
+      "{" + Bench.lineHead(8, "/tmp/we\"ird\\dir") + "}")
     assert(hostile \ "cpus" === JInt(8))
     assert(hostile \ "sf" === JString("/tmp/we\"ird\\dir"))
     assert(hostile \ "sf_num" === JNull)
@@ -126,38 +100,36 @@ class BenchHistorySpec extends AnyFunSuite {
   test("nonComparable mirrors the history tool's thresholds") {
     val quiet = Some((1.0, 1.0, 1.0))
     // clean on every covariate -> comparable
-    assert(Bench.nonComparable(32, quiet, quiet, Some(0L)) === Some(false))
+    assert(BenchLegacy.nonComparable(32, quiet, quiet, Some(0L)) === Some(false))
     // steal bar is strict >, matching SUSPECT_STEAL_DELTA's selftest pin
-    assert(Bench.nonComparable(32, quiet, quiet,
-      Some(Bench.SuspectStealDelta)) === Some(false))
-    assert(Bench.nonComparable(32, quiet, quiet,
-      Some(Bench.SuspectStealDelta + 1)) === Some(true))
+    assert(BenchLegacy.nonComparable(32, quiet, quiet,
+      Some(BenchLegacy.SuspectStealDelta)) === Some(false))
+    assert(BenchLegacy.nonComparable(32, quiet, quiet,
+      Some(BenchLegacy.SuspectStealDelta + 1)) === Some(true))
     // 1-minute loadavg above the worker count at EITHER endpoint flags
-    assert(Bench.nonComparable(32, Some((33.0, 0.0, 0.0)), quiet,
+    assert(BenchLegacy.nonComparable(32, Some((33.0, 0.0, 0.0)), quiet,
       Some(0L)) === Some(true))
-    assert(Bench.nonComparable(32, quiet, Some((32.5, 0.0, 0.0)),
+    assert(BenchLegacy.nonComparable(32, quiet, Some((32.5, 0.0, 0.0)),
       Some(0L)) === Some(true))
-    assert(Bench.nonComparable(32, Some((32.0, 0.0, 0.0)), quiet,
+    assert(BenchLegacy.nonComparable(32, Some((32.0, 0.0, 0.0)), quiet,
       Some(0L)) === Some(false)) // > not >=
     // partial covariates: the readable ones adjudicate
-    assert(Bench.nonComparable(32, None, None, Some(9999L)) === Some(true))
-    assert(Bench.nonComparable(32, Some((40.0, 0.0, 0.0)), None, None)
+    assert(BenchLegacy.nonComparable(32, None, None, Some(9999L)) === Some(true))
+    assert(BenchLegacy.nonComparable(32, Some((40.0, 0.0, 0.0)), None, None)
       === Some(true))
     // nothing readable -> None (unknown is not clean)
-    assert(Bench.nonComparable(32, None, None, None) === None)
+    assert(BenchLegacy.nonComparable(32, None, None, None) === None)
   }
 
   test("verdictFields serialize tail-most as number/boolean, null when unknown") {
-    assert(JsonMethods.parse("{" + Bench.verdictFields(Some(42L), Some(false)) + "}")
+    assert(JsonMethods.parse("{" + BenchLegacy.verdictFields(Some(42L), Some(false)) + "}")
       === JsonMethods.parse("""{"steal_delta":42,"noncomparable":false}"""))
-    assert(JsonMethods.parse("{" + Bench.verdictFields(None, None) + "}")
+    assert(JsonMethods.parse("{" + BenchLegacy.verdictFields(None, None) + "}")
       === JsonMethods.parse("""{"steal_delta":null,"noncomparable":null}"""))
     // the composed line shape: verdict fields AFTER value, so any tail
     // truncation that keeps the headline keeps its comparability flag
-    val line = s"""{${Bench.lineHead("both", 32, "/d/sf1",
-      Bench.covariateJson(None, Some(0L)),
-      Bench.covariateJson(None, Some(500L)))},"value":1.5,${
-      Bench.verdictFields(Some(500L), Some(true))}}"""
+    val line = s"""{${Bench.lineHead(32, "/d/sf1")},"value":1.5,${
+      BenchLegacy.verdictFields(Some(500L), Some(true))}}"""
     val tail = line.substring(line.indexOf("\"value\""))
     assert(tail === """"value":1.5,"steal_delta":500,"noncomparable":true}""")
     val parsed = JsonMethods.parse(line)
@@ -175,7 +147,7 @@ class BenchHistorySpec extends AnyFunSuite {
         """"load_start":{"loadavg":[1.0,2.0,3.0],"steal_ticks":7},""" +
         """"load_end":{"loadavg":[4.0,5.0,6.0],"steal_ticks":9},""" +
         """"value":1.5,"steal_delta":2,"noncomparable":false}"""
-    val parsed = JsonMethods.parse(Bench.historyLine(
+    val parsed = JsonMethods.parse(BenchLegacy.historyLine(
       benchLine, "2026-08-13T00:00:00Z", "a" * 40, 2))
     assert(parsed \ "ts" === JString("2026-08-13T00:00:00Z"))
     assert(parsed \ "sha" === JString("a" * 40))

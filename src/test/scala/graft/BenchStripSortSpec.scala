@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row, classic}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Contract guard for the bench's `Bench.withoutTopSort`: the "unordered"
+/** Contract guard for the bench's `BenchLegacy.withoutTopSort`: the "unordered"
   * diagnostic numbers are honest only if it strips EXACTLY the trailing
   * determinism sort — a global Sort at the plan root or under trailing
   * Projects — and leaves everything else (top-k sorts under Limit,
@@ -18,7 +18,15 @@ class BenchStripSortSpec extends SparkSpec {
   }
 
   private def strip(d: DataFrame): Option[LogicalPlan] =
-    Bench.withoutTopSort(d.queryExecution.logical)
+    BenchLegacy.withoutTopSort(d.queryExecution.logical)
+
+  /** A DataFrame over a logical plan, through the public Dataset
+    * constructor (Spark's own plan-to-DataFrame factory is `private[sql]`). */
+  private def frame(plan: LogicalPlan): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val schema = session.sessionState.executePlan(plan).analyzed.schema
+    new classic.Dataset[Row](session, plan, Encoders.row(schema))
+  }
 
   private def hasGlobalSort(p: LogicalPlan): Boolean =
     p.collect { case s: Sort if s.global => s }.nonEmpty
@@ -28,7 +36,7 @@ class BenchStripSortSpec extends SparkSpec {
     val stripped = strip(sorted)
     assert(stripped.isDefined, "trailing orderBy must be strippable")
     assert(!hasGlobalSort(stripped.get), "no global sort may remain")
-    val bridge = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, stripped.get)
+    val bridge = frame(stripped.get)
     assert(bridge.collect().toSet === sorted.collect().toSet,
       "stripping may change order only, never the row set")
   }
@@ -42,7 +50,7 @@ class BenchStripSortSpec extends SparkSpec {
     val stripped = strip(sorted)
     assert(stripped.isDefined, "sort under trailing Projects must be found")
     assert(!hasGlobalSort(stripped.get))
-    val bridge = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, stripped.get)
+    val bridge = frame(stripped.get)
     assert(bridge.collect().toSet === sorted.collect().toSet)
     assert(bridge.columns.toSeq === sorted.columns.toSeq,
       "the trailing projections must survive the strip intact")
@@ -69,12 +77,12 @@ class BenchStripSortSpec extends SparkSpec {
     assert(strip(df.groupBy("g").count()).isEmpty)
   }
 
-  // gitHeadSha feeds the BENCH_HISTORY provenance field; it must resolve
+  // gitHeadSha fed the history lines' provenance field; it must resolve
   // HEAD without forking a process, and fail to None (never garbage)
   // when there's no repo.
   test("gitHeadSha resolves this repo's HEAD to a 40-hex sha") {
     // sbt test runs from the repo root, same cwd the bench runs from
-    val sha = Bench.gitHeadSha()
+    val sha = BenchLegacy.gitHeadSha()
     assert(sha.isDefined, ".git/HEAD must resolve")
     assert(sha.get.matches("[0-9a-f]{40}"))
     // and it matches what git itself says HEAD is (read the ref chain
@@ -91,6 +99,6 @@ class BenchStripSortSpec extends SparkSpec {
 
   test("gitHeadSha is None outside a git repo") {
     val tmp = java.nio.file.Files.createTempDirectory("norepo").toString
-    assert(Bench.gitHeadSha(tmp).isEmpty)
+    assert(BenchLegacy.gitHeadSha(tmp).isEmpty)
   }
 }

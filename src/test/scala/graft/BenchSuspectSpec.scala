@@ -4,42 +4,31 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's per-query outlier self-adjudication. Twice (r15's
-  * one-shot 6.4s, r17's full-run 12.5s) a d57 weather spike polluted
-  * the headline artifact and a human had to adjudicate it from
-  * BENCH_HISTORY by hand; the bench now checks each query's min against
-  * the median of its comparable history and emits a `suspect` block —
-  * this spec is the required selftest that a synthetic spike produces
-  * the marker, plus the cohort-filter and serialization pins that keep
-  * the check honest (a band fed by noncomparable or foreign-cohort
-  * lines would flag weather as regression and vice versa). */
+/** Pins the retired per-query suspect bands and anchor-band classifier
+  * still kept in [[BenchLegacy]]: the suspect bars (ratio, floor, thick
+  * history), the reference-grade gate, the band verdict's classes and
+  * gates, and that each serializer stays parseable JSON. */
 class BenchSuspectSpec extends AnyFunSuite {
 
   private def tmpFile(content: String): String = {
-    val p = java.nio.file.Files.createTempFile("benchsus", ".jsonl")
+    val p = java.nio.file.Files.createTempFile("benchsus", ".json")
     java.nio.file.Files.write(p, content.getBytes("UTF-8"))
+    p.toFile.deleteOnExit()
     p.toString
   }
 
-  /** A full history line built with the REAL serialization helpers —
-    * the selftest must exercise the same shape main() emits, not a
-    * hand-approximated one. */
-  private def syntheticLine(d57Min: Double, clean: Boolean = true,
-                            cpus: Int = 32, mode: String = "both",
-                            sfDir: String = "/root/testdata/sf0.1"): String = {
-    val cov = Bench.covariateJson(Some((1.0, 1.0, 1.0)), Some(0L))
-    val body = s"""{${Bench.lineHead(mode, cpus, sfDir, cov, cov)},""" +
-      s""""samples":{"d57_containment":[${d57Min + 0.4},$d57Min],"q01":[1.1,1.0]},""" +
-      s""""queries":{"d57_containment":$d57Min,"q01":1.0},""" +
-      s""""failed":[],"value":${d57Min + 1.0},""" +
-      s"""${Bench.verdictFields(Some(if (clean) 0L else 9999L), Some(!clean))}}"""
-    Bench.historyLine(body, "2026-08-14T00:00:00Z", "b" * 40, 1)
-  }
+  private def band(lo: Double = 51, hi: Double = 56): Option[BenchLegacy.AnchorBand] =
+    Some(BenchLegacy.AnchorBand(lo, hi, Some(32), Some(0.1), Some("b" * 40)))
+
+  /** A 10-query base cohort (band-sha minima, 2.0 s each) — this run's
+    * mins scaled per query are the knobs the class bars read. */
+  private def bandsOf(n: Int = 10): Map[String, Double] =
+    (1 to n).map(i => f"q$i%02d" -> 2.0).toMap
 
   test("medianOf: odd takes the middle, even averages the two middles") {
-    assert(Bench.medianOf(Seq(3.0, 1.0, 2.0)) === 2.0)
-    assert(Bench.medianOf(Seq(4.0, 1.0, 2.0, 3.0)) === 2.5)
-    assert(Bench.medianOf(Seq(7.0)) === 7.0)
+    assert(BenchLegacy.medianOf(Seq(3.0, 1.0, 2.0)) === 2.0)
+    assert(BenchLegacy.medianOf(Seq(4.0, 1.0, 2.0, 3.0)) === 2.5)
+    assert(BenchLegacy.medianOf(Seq(7.0)) === 7.0)
   }
 
   test("suspectsOf flags ratio+floor breaches only, against thick history only") {
@@ -48,306 +37,25 @@ class BenchSuspectSpec extends AnyFunSuite {
       "tiny"  -> Seq(0.1, 0.1, 0.1, 0.1, 0.1),   // median 0.1
       "thin"  -> Seq(1.0, 1.0))                   // < SuspectMinHistory
     // the r17 case: 12.46 vs band ~4 -> flagged with the band evidence
-    assert(Bench.suspectsOf(Map("big" -> 12.46), hist)
+    assert(BenchLegacy.suspectsOf(Map("big" -> 12.46), hist)
       === Map("big" -> ((4.0, 5))))
     // the r15 case: 6.4 vs band ~4 (1.6x) — the incident the 1.5 ratio
     // exists to catch (a 2.0 bar missed it on the real history replay)
-    assert(Bench.suspectsOf(Map("big" -> 6.4), hist).keySet === Set("big"))
+    assert(BenchLegacy.suspectsOf(Map("big" -> 6.4), hist).keySet === Set("big"))
     // in band -> clean
-    assert(Bench.suspectsOf(Map("big" -> 4.5), hist).isEmpty)
+    assert(BenchLegacy.suspectsOf(Map("big" -> 4.5), hist).isEmpty)
     // ratio breached but under the absolute floor: scheduler jitter on
     // a sub-second query must not flag (0.35 is 3.5x but only +0.25s)
-    assert(Bench.suspectsOf(Map("tiny" -> 0.35), hist).isEmpty)
+    assert(BenchLegacy.suspectsOf(Map("tiny" -> 0.35), hist).isEmpty)
     // floor cleared but ratio not: a +1.1s drift to 1.28x on a 4s query
     // is the diffuse-weather band, not a spike
-    assert(Bench.suspectsOf(Map("big" -> 5.1), hist).isEmpty)
+    assert(BenchLegacy.suspectsOf(Map("big" -> 5.1), hist).isEmpty)
     // thin history never flags; unknown query never flags
-    assert(Bench.suspectsOf(Map("thin" -> 99.0, "new" -> 99.0), hist).isEmpty)
-  }
-
-  test("lineQueryMins takes per-sample mins from a comparable line") {
-    val m = Bench.lineQueryMins(syntheticLine(4.0), 32, Some(0.1),
-      headlineOrdered = true)
-    assert(m === Map("d57_containment" -> 4.0, "q01" -> 1.0))
-  }
-
-  test("lineQueryMins rejects foreign-cohort and dirty lines") {
-    val sf = Some(0.1)
-    // a noncomparable line must NOT feed the band (its numbers carry the
-    // disturbance the band exists to detect)
-    assert(Bench.lineQueryMins(syntheticLine(4.0, clean = false), 32, sf, true).isEmpty)
-    // wrong cpus / wrong sf / wrong headline cohort
-    assert(Bench.lineQueryMins(syntheticLine(4.0, cpus = 8), 32, sf, true).isEmpty)
-    assert(Bench.lineQueryMins(syntheticLine(4.0), 32, Some(0.01), true).isEmpty)
-    assert(Bench.lineQueryMins(syntheticLine(4.0, mode = "unordered"), 32, sf, true).isEmpty)
-    // an unordered headline compares against unordered lines only
-    assert(Bench.lineQueryMins(syntheticLine(4.0, mode = "unordered"), 32, sf,
-      headlineOrdered = false).nonEmpty)
-    assert(Bench.lineQueryMins(syntheticLine(4.0), 32, sf,
-      headlineOrdered = false).isEmpty)
-    // no sf to match (hostile dir) -> no band, never a crash
-    assert(Bench.lineQueryMins(syntheticLine(4.0), 32, None, true).isEmpty)
-    // garbage lines are empty, never fatal
-    assert(Bench.lineQueryMins("not json", 32, sf, true).isEmpty)
-    assert(Bench.lineQueryMins("""{"cpus":32}""", 32, sf, true).isEmpty)
-  }
-
-  test("lineQueryMins reads the round-13 string-cpus and queries-only vintages") {
-    val stringCpus =
-      """{"mode":"both","cpus":"32","sf_num":0.1,""" +
-        """"samples":{"q01":[2.0,1.5]},"noncomparable":false}"""
-    assert(Bench.lineQueryMins(stringCpus, 32, Some(0.1), true)
-      === Map("q01" -> 1.5))
-    val queriesOnly =
-      """{"mode":"both","cpus":32,"sf_num":0.1,""" +
-        """"queries":{"q01":1.25},"noncomparable":false}"""
-    assert(Bench.lineQueryMins(queriesOnly, 32, Some(0.1), true)
-      === Map("q01" -> 1.25))
-  }
-
-  test("SELFTEST: a synthetic d57 spike over a clean history produces the marker") {
-    // six comparable lines with d57 in its ~4s band, one dirty line and
-    // one foreign-cohort line that must not dilute the median
-    val hist = tmpFile((Seq(3.9, 4.0, 4.1, 4.2, 4.0, 4.05).map(syntheticLine(_)) ++
-      Seq(syntheticLine(30.0, clean = false), syntheticLine(30.0, cpus = 8)))
-      .mkString("", "\n", "\n"))
-    val bands = Bench.historyBands(hist, 32, Some(0.1), headlineOrdered = true)
-    assert(bands("d57_containment").size === 6)
-    // the r17 driver capture replayed: d57 min 12.46 against the band
-    val sus = Bench.suspectsOf(
-      Map("d57_containment" -> 12.46, "q01" -> 1.05), bands)
-    assert(sus.keySet === Set("d57_containment"),
-      "the spiked query is flagged; the in-band one is not")
-    val (med, n) = sus("d57_containment")
-    assert(med === 4.025 && n === 6)
-    // and an in-band run of the same history flags nothing
-    assert(Bench.suspectsOf(
-      Map("d57_containment" -> 4.5, "q01" -> 1.05), bands).isEmpty)
-  }
-
-  test("historyBands: missing file is empty, never fatal") {
-    assert(Bench.historyBands("/no/such/file.jsonl", 32, Some(0.1), true).isEmpty)
-  }
-
-  // ── Prior-lead adjudication (the reading rule, automated) ──────────
-
-  /** A line carrying q42 at `min` with an optional suspect block —
-    * built with the REAL serializers, spliced exactly where main() puts
-    * them (suspect between value and the verdict tail). The r18 q42
-    * incident's numbers are the defaults of the tests below. */
-  private def leadLine(min: Double, med: Double = 2.05,
-                       rerun: Option[Double] = None, flagged: Boolean = true,
-                       clean: Boolean = true, sha: String = "c" * 40,
-                       prior: String = ""): String = {
-    val cov = Bench.covariateJson(Some((1.0, 1.0, 1.0)), Some(0L))
-    val sus =
-      if (flagged) Bench.suspectJson(Map("q42" -> ((med, 9))),
-        Map("q42" -> min), rerun.map("q42" -> _).toMap, rerun.map(_ => 1L))
-      else Bench.suspectJson(Map.empty, Map.empty, Map.empty, None)
-    val pr = if (prior.nonEmpty) prior + "," else ""
-    val body = s"""{${Bench.lineHead("both", 32, "/root/testdata/sf0.1", cov, cov)},""" +
-      s""""samples":{"q42":[${min + 0.4},$min],"q01":[1.1,1.0]},""" +
-      s""""queries":{"q42":$min,"q01":1.0},""" +
-      s""""failed":[],"value":${min + 1.0},$sus,$pr""" +
-      s"""${Bench.verdictFields(Some(if (clean) 0L else 9999L), Some(!clean))}}"""
-    Bench.historyLine(body, "2026-08-15T01:00:00Z", sha, 1)
-  }
-
-  test("openLeadsOf: a rerun-repeated suspect is an open lead, with provenance") {
-    // the r18 q42 shape: min 3.22 vs band 2.05, rerun 3.58 — repeated
-    val Some(p) = Bench.openLeadsOf(
-      leadLine(3.22, rerun = Some(3.58)), 32, Some(0.1), headlineOrdered = true)
-    assert(p.ts === "2026-08-15T01:00:00Z" && p.sha === "c" * 40)
-    // a lead the line flagged ITSELF was measured here: origin = (ts, sha)
-    assert(p.leads === Map("q42" ->
-      Bench.Lead(3.22, Some(3.58), Some(("2026-08-15T01:00:00Z", "c" * 40)))))
-    // a rerun that never happened (dirty-covariate path) is still open
-    assert(Bench.openLeadsOf(leadLine(3.22, rerun = None), 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" ->
-        Bench.Lead(3.22, None, Some(("2026-08-15T01:00:00Z", "c" * 40))))))
-  }
-
-  test("openLeadsOf: self-cleared and unflagged lines carry no open lead") {
-    // rerun back at band (the q10 firing's shape): settled as weather
-    assert(Bench.openLeadsOf(leadLine(3.22, rerun = Some(2.1)), 32, Some(0.1), true)
-      .exists(_.leads.isEmpty))
-    // no suspect block at all (in-band run / pre-feature vintage)
-    assert(Bench.openLeadsOf(leadLine(1.96, flagged = false), 32, Some(0.1), true)
-      .exists(_.leads.isEmpty))
-    assert(Bench.openLeadsOf(syntheticLine(4.0), 32, Some(0.1), true)
-      .exists(_.leads.isEmpty))
-    // foreign/dirty lines are not evidence at all
-    assert(Bench.openLeadsOf(leadLine(3.22, clean = false), 32, Some(0.1), true).isEmpty)
-    assert(Bench.openLeadsOf("not json", 32, Some(0.1), true).isEmpty)
-  }
-
-  test("lastOpenLeads: adjacent comparable line only; dirty lines skipped") {
-    // lead line, then a dirty line: the lead is still the adjacent
-    // comparable line — a disturbed run must not close it
-    val f1 = tmpFile(Seq(leadLine(3.22, rerun = Some(3.58)),
-      leadLine(30.0, clean = false)).mkString("", "\n", "\n"))
-    assert(Bench.lastOpenLeads(f1, 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" ->
-        Bench.Lead(3.22, Some(3.58), Some(("2026-08-15T01:00:00Z", "c" * 40))))))
-    // a later comparable line closes it (whatever its own content)
-    val f2 = tmpFile(Seq(leadLine(3.22, rerun = Some(3.58)),
-      leadLine(1.96, flagged = false)).mkString("", "\n", "\n"))
-    assert(Bench.lastOpenLeads(f2, 32, Some(0.1), true).exists(_.leads.isEmpty))
-    assert(Bench.lastOpenLeads("/no/such/file.jsonl", 32, Some(0.1), true).isEmpty)
-  }
-
-  test("carry-forward: an unadjudicated prior lead (verdict null) stays open") {
-    // the dropped-lead hole: line N opens a lead, line N+1 is comparable
-    // but its q42 FAILED — verdict null. Without carry-forward, line N+1
-    // becomes the most recent comparable line with an empty suspect
-    // block and the lead silently dies. With it, line N+1's own
-    // prior_suspect block re-exposes the lead with its ORIGINAL
-    // evidence.
-    val origin = Some(("2026-08-15T01:00:00Z", "c" * 40))
-    val unadjudicated = Bench.priorSuspectJson(
-      Map("q42" -> Bench.Lead(3.22, Option(3.58), origin)),
-      Some(("2026-08-15T01:00:00Z", "c" * 40)), freshJvm = true,
-      Map.empty, Map("q42" -> None))
-    val carrier = leadLine(1.0, flagged = false, prior = unadjudicated,
-      sha = "d" * 40)
-    assert(Bench.openLeadsOf(carrier, 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" -> Bench.Lead(3.22, Some(3.58), origin))))
-    // an ADJUDICATED prior lead (refuted here) does not carry
-    val refuted = Bench.priorSuspectJson(
-      Map("q42" -> Bench.Lead(3.22, Option(3.58), origin)),
-      Some(("2026-08-15T01:00:00Z", "c" * 40)), freshJvm = true,
-      Map("q42" -> 1.96), Map("q42" -> Some("refuted")))
-    assert(Bench.openLeadsOf(leadLine(1.0, flagged = false, prior = refuted),
-      32, Some(0.1), true).exists(_.leads.isEmpty))
-    // end-to-end through the file: lead line, then the failed-query
-    // carrier — lastOpenLeads surfaces the carried lead from the
-    // ADJACENT line (the carrier), original numbers AND origin intact
-    val f = tmpFile(Seq(leadLine(3.22, rerun = Some(3.58)), carrier)
-      .mkString("", "\n", "\n"))
-    val Some(p) = Bench.lastOpenLeads(f, 32, Some(0.1), true)
-    assert(p.sha === "d" * 40 &&
-      p.leads === Map("q42" -> Bench.Lead(3.22, Some(3.58), origin)))
-    // the carrier's OWN suspect evidence wins over a stale carried copy
-    val both = leadLine(4.0, rerun = Some(4.2), prior = unadjudicated)
-    assert(Bench.openLeadsOf(both, 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" -> Bench.Lead(4.0, Some(4.2),
-        Some(("2026-08-15T01:00:00Z", "c" * 40))))))
-  }
-
-  test("scanHistory: one pass yields the bands, last leads, and clean reference") {
-    val f = tmpFile(Seq(syntheticLine(4.0), leadLine(3.22, rerun = Some(3.58)),
-      leadLine(30.0, clean = false)).mkString("", "\n", "\n"))
-    val (bands, last, ref) = Bench.scanHistory(f, 32, Some(0.1), headlineOrdered = true)
-    assert(bands("q42") === Seq(3.22) && bands("d57_containment") === Seq(4.0))
-    assert(last.exists(_.leads === Map("q42" ->
-      Bench.Lead(3.22, Some(3.58), Some(("2026-08-15T01:00:00Z", "c" * 40))))))
-    // the reference and the lead line are DIFFERENT lines here: the
-    // last comparable line carries an open suspect, so its headline
-    // (inflated by the spike) is not reference-grade — the reference is
-    // the older suspect-free line
-    assert(ref.exists(r => r.sha === "b" * 40 && r.value === 5.0
-      && r.jvmRun === Some(1)))
-    assert(Bench.scanHistory("/no/such.jsonl", 32, Some(0.1), true)
-      === ((Map.empty, None, None)))
-  }
-
-  test("priorSuspectJson escapes a hostile lead name from parsed history") {
-    val j = JsonMethods.parse("{" + Bench.priorSuspectJson(
-      Map("""q"42\x""" -> Bench.Lead(3.22, None, None)), None,
-      freshJvm = true, Map.empty, Map.empty) + "}")
-    assert(jnumOf(j \ "prior_suspect" \ """q"42\x""" \ "prior_min") === Some(3.22))
-  }
-
-  private def jnumOf(v: JValue): Option[Double] = v match {
-    case JDouble(d) => Some(d)
-    case JInt(n)    => Some(n.toDouble)
-    case _          => None
-  }
-
-  test("adjudicate: re-flagged = confirmed, in-band = refuted, failed = null") {
-    val leads = Map("q42" -> Bench.Lead(3.22, Option(3.58), None),
-      "gone" -> Bench.Lead(9.0, Option(9.0), None))
-    // in-band this run (the real outcome: 1.96, not re-flagged) -> refuted;
-    // a registry query that FAILED this run -> null (carries forward)
-    assert(Bench.adjudicate(leads, Map("q42" -> 1.96), Map.empty, Set("gone"),
-      Set("q42", "gone"))
-      === Map("q42" -> Some("refuted"), "gone" -> None))
-    // re-flagged this run -> confirmed (a regression reproduces)
-    assert(Bench.adjudicate(Map("q42" -> Bench.Lead(3.22, Option(3.58), None)),
-      Map("q42" -> 3.3), Map("q42" -> ((2.05, 10))), Set.empty, Set("q42"))
-      === Map("q42" -> Some("confirmed")))
-  }
-
-  test("adjudicate: a lead whose query left the registry retires") {
-    // without this, a renamed/removed query's lead has no possible
-    // measurement, stays verdict-null, and the carry-forward re-emits it
-    // on every future comparable line forever
-    val leads = Map("old_name" -> Bench.Lead(9.0, Option(9.5), None))
-    assert(Bench.adjudicate(leads, Map("q42" -> 1.96), Map.empty, Set.empty,
-      Set("q42")) === Map("old_name" -> Some("retired")))
-    // and a retired verdict closes the carry: the emitting line is no
-    // longer an open lead for the next run
-    val retired = Bench.priorSuspectJson(leads, Some(("2026-08-15T01:00:00Z",
-      "c" * 40)), freshJvm = true, Map.empty,
-      Map("old_name" -> Some("retired")))
-    assert(Bench.openLeadsOf(leadLine(1.0, flagged = false, prior = retired),
-      32, Some(0.1), true).exists(_.leads.isEmpty))
-  }
-
-  test("END-TO-END: the q42 incident replayed — next comparable line refutes") {
-    // six clean in-band lines, the open-lead line, one dirty line after
-    val hist = tmpFile((Seq(2.0, 2.1, 1.9, 2.05, 2.0, 2.1).map(v =>
-      leadLine(v, flagged = false)) ++
-      Seq(leadLine(3.22, rerun = Some(3.58)), leadLine(30.0, clean = false)))
-      .mkString("", "\n", "\n"))
-    val bands = Bench.historyBands(hist, 32, Some(0.1), headlineOrdered = true)
-    val Some(pl) = Bench.lastOpenLeads(hist, 32, Some(0.1), true)
-    val leads = pl.leads
-    assert(leads.keySet === Set("q42"))
-    // this run reads 1.96: not re-flagged against the same bands -> refuted
-    val best = Map("q42" -> 1.96, "q01" -> 1.0)
-    val sus = Bench.suspectsOf(best, bands)
-    assert(sus.isEmpty)
-    assert(Bench.adjudicate(leads, best, sus, Set.empty, best.keySet)
-      === Map("q42" -> Some("refuted")))
-    // ...and at 3.3 it IS re-flagged against the same bands -> confirmed
-    val best2 = Map("q42" -> 3.3, "q01" -> 1.0)
-    val sus2 = Bench.suspectsOf(best2, bands)
-    assert(sus2.contains("q42"))
-    assert(Bench.adjudicate(leads, best2, sus2, Set.empty, best2.keySet)
-      === Map("q42" -> Some("confirmed")))
-  }
-
-  test("priorSuspectJson: evidence + origin + verdict + src, parseable, null-safe") {
-    val j = JsonMethods.parse("{" + Bench.priorSuspectJson(
-      Map("q42" -> Bench.Lead(3.22, Option(3.58),
-            Some(("2026-08-15T01:00:00Z", "c" * 40))),
-          "gone" -> Bench.Lead(9.0, None, None)),
-      Some(("2026-08-15T01:00:00Z", "c" * 40)), freshJvm = true,
-      Map("q42" -> 1.96),
-      Map("q42" -> Some("refuted"), "gone" -> None)) + "}")
-    val q = j \ "prior_suspect" \ "q42"
-    assert(q \ "prior_min" === JDouble(3.22))
-    assert(q \ "prior_rerun" === JDouble(3.58))
-    assert(q \ "origin" \ "ts" === JString("2026-08-15T01:00:00Z"))
-    assert(q \ "origin" \ "sha" === JString("c" * 40))
-    assert(q \ "min" === JDouble(1.96))
-    assert(q \ "verdict" === JString("refuted"))
-    // a lead whose query failed/didn't run this time: nulls, verdict open
-    val g = j \ "prior_suspect" \ "gone"
-    assert(g \ "prior_rerun" === JNull && g \ "min" === JNull && g \ "verdict" === JNull)
-    assert(g \ "origin" === JNull) // origin-less pre-vintage lead
-    assert(j \ "prior_suspect_src" \ "sha" === JString("c" * 40))
-    assert(j \ "prior_suspect_src" \ "fresh_jvm" === JBool(true))
-    // the nothing-open shape
-    val empty = JsonMethods.parse("{" + Bench.priorSuspectJson(
-      Map.empty, None, freshJvm = true, Map.empty, Map.empty) + "}")
-    assert(empty \ "prior_suspect" === JObject(Nil))
-    assert(empty \ "prior_suspect_src" === JNull)
+    assert(BenchLegacy.suspectsOf(Map("thin" -> 99.0, "new" -> 99.0), hist).isEmpty)
   }
 
   test("suspectJson: names + per-query evidence + rerun, parseable, null-safe") {
-    val j = JsonMethods.parse("{" + Bench.suspectJson(
+    val j = JsonMethods.parse("{" + BenchLegacy.suspectJson(
       Map("d57_containment" -> ((4.025, 6))),
       Map("d57_containment" -> 12.46, "q01" -> 1.0),
       Map("d57_containment" -> 4.51), Some(65L)) + "}")
@@ -359,207 +67,40 @@ class BenchSuspectSpec extends AnyFunSuite {
     assert(d \ "rerun" === JDouble(4.51))
     assert(j \ "rerun_steal_delta" === JInt(65))
     // the no-suspect / no-rerun shape: empty list+object, nulls
-    val empty = JsonMethods.parse("{" + Bench.suspectJson(
+    val empty = JsonMethods.parse("{" + BenchLegacy.suspectJson(
       Map.empty, Map.empty, Map.empty, None) + "}")
     assert(empty \ "suspect" === JArray(Nil))
     assert(empty \ "suspect_detail" === JObject(Nil))
     assert(empty \ "rerun_steal_delta" === JNull)
     // a flagged query whose re-run did not happen (dirty covariates)
     // serializes rerun:null — "unadjudicated", distinct from "settled"
-    val noRerun = JsonMethods.parse("{" + Bench.suspectJson(
+    val noRerun = JsonMethods.parse("{" + BenchLegacy.suspectJson(
       Map("q" -> ((1.0, 9))), Map("q" -> 3.0), Map.empty, None) + "}")
     assert(noRerun \ "suspect_detail" \ "q" \ "rerun" === JNull)
-  }
-
-  // ── Round 19: per-lead origin, non-finite guards, last_clean, SUMMARY ──
-
-  test("origin: a carried lead keeps the MEASURING line's ts/sha, two hops deep") {
-    // lead measured at line A; line B (sha d…) could not adjudicate it
-    // (verdict null) and carries it; line C reads B. C's bisect target
-    // must be A — B's prior_suspect_src names B's own adjudication
-    // target, but the lead's origin field survives the hop verbatim.
-    val originA = Some(("2026-08-15T01:00:00Z", "a" * 40))
-    val carriedByB = Bench.priorSuspectJson(
-      Map("q42" -> Bench.Lead(3.22, Some(3.58), originA)),
-      Some(("2026-08-15T02:00:00Z", "b" * 40)), freshJvm = true,
-      Map.empty, Map("q42" -> None))
-    val lineB = leadLine(1.0, flagged = false, prior = carriedByB, sha = "d" * 40)
-    assert(Bench.openLeadsOf(lineB, 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" -> Bench.Lead(3.22, Some(3.58), originA))))
-  }
-
-  test("origin: a pre-origin vintage entry stays None — never backfilled from src") {
-    // entries written before the per-lead origin field existed carry no
-    // `origin` key. The carrier's prior_suspect_src is the measuring
-    // line ONLY for a first-hop carry — for a deeper pre-vintage chain
-    // it is a later carrier, and the line cannot tell the two apart, so
-    // backfilling would launder a guess into measured-here provenance
-    // that every later hop preserves verbatim. None is honest; the
-    // history tool still displays src as its best-effort pointer.
-    val vintage =
-      s"""{"ts":"2026-08-15T03:00:00Z","sha":"${"e" * 40}","jvm_run":1,""" +
-        """"mode":"both","cpus":32,"sf_num":0.1,""" +
-        """"samples":{"q01":[1.0]},"queries":{"q01":1.0},"failed":[],"value":1.0,""" +
-        """"suspect":[],"suspect_detail":{},"rerun_steal_delta":null,""" +
-        """"prior_suspect":{"q42":{"prior_min":3.22,"prior_rerun":3.58,"min":null,"verdict":null}},""" +
-        s""""prior_suspect_src":{"ts":"2026-08-15T01:00:00Z","sha":"${"a" * 40}","fresh_jvm":true},""" +
-        """"steal_delta":0,"noncomparable":false}"""
-    assert(Bench.openLeadsOf(vintage, 32, Some(0.1), true)
-      .exists(_.leads === Map("q42" -> Bench.Lead(3.22, Some(3.58), None))))
-  }
-
-  test("non-finite guard: 1e999 in history parses away; serializers emit null") {
-    // parse side: a mangled line whose sample overflows to Infinity
-    // contributes nothing to the band (and can never reach a serializer)
-    val mangled = """{"mode":"both","cpus":32,"sf_num":0.1,""" +
-      """"samples":{"q01":[1e999],"q02":[2.0]},"noncomparable":false}"""
-    assert(Bench.lineQueryMins(mangled, 32, Some(0.1), true) === Map("q02" -> 2.0))
-    // serialize side (belt and braces): a non-finite value becomes null,
-    // never the JSON-invalid `Infinity` token that would invalidate the
-    // emitting line (which the next run would then silently discard)
-    val j = JsonMethods.parse("{" + Bench.priorSuspectJson(
-      Map("q" -> Bench.Lead(Double.PositiveInfinity, Some(Double.NaN), None)),
-      None, freshJvm = true, Map("q" -> Double.NegativeInfinity),
-      Map("q" -> None)) + "}")
-    val q = j \ "prior_suspect" \ "q"
-    assert(q \ "prior_min" === JNull && q \ "prior_rerun" === JNull
-      && q \ "min" === JNull)
-    assert(Bench.jsonNum(1.5) === "1.5" && Bench.jsonNum(Double.NaN) === "null")
-  }
-
-  test("last_clean: non-reference-grade lines carry the reference; reference-grade don't") {
-    val p = Bench.CleanRef("2026-08-15T01:00:00Z", "c" * 40, Some(2), 52.45)
-    // a run that is not reference-grade: the line whose headline should
-    // not be trusted also names the trusted number (the r18 74.16 s
-    // storm capture needed a manual BENCH_HISTORY read to find 52.45 s
-    // on the same sha), with jvm_run so a warm repeat is never mistaken
-    // for cold
-    val dirty = JsonMethods.parse(
-      "{" + Bench.lastCleanField(refGrade = false, Some(p)).stripSuffix(",") + "}")
-    assert(dirty \ "last_clean" \ "value" === JDouble(52.45))
-    assert(dirty \ "last_clean" \ "ts" === JString("2026-08-15T01:00:00Z"))
-    assert(dirty \ "last_clean" \ "sha" === JString("c" * 40))
-    assert(dirty \ "last_clean" \ "jvm_run" === JInt(2))
-    // no reference-grade history: null, never absent on a distrusted line
-    assert(Bench.lastCleanField(refGrade = false, None) === """"last_clean":null,""")
-    // reference-grade run: the line IS the reference — field omitted
-    assert(Bench.lastCleanField(refGrade = true, Some(p)) === "")
-    // pre-jvm_run vintage reference: jvm_run null, not a crash
-    val noRun = Bench.CleanRef("t", "s", None, 50.0)
-    assert(JsonMethods.parse(Bench.lastCleanInner(Some(noRun)))
-      \ "jvm_run" === JNull)
   }
 
   test("referenceGrade: the emit gate mirrors the CleanRef read rule (r19 ADVICE)") {
     // Round 19 gated on comparability alone; a comparable run with
     // failed queries (value -1.0 sentinel) or open suspects then wrote
-    // the same null a genuinely clean run writes. The gate now matches
-    // cleanRefOfJson: comparable AND failed-free AND suspect-free.
-    assert(Bench.referenceGrade(Some(false), Set.empty, Set.empty))
+    // the same null a genuinely clean run writes. The gate is:
+    // comparable AND failed-free AND suspect-free.
+    assert(BenchLegacy.referenceGrade(Some(false), Set.empty, Set.empty))
     // dirty or unknown covariates: never reference-grade
-    assert(!Bench.referenceGrade(Some(true), Set.empty, Set.empty))
-    assert(!Bench.referenceGrade(None, Set.empty, Set.empty))
+    assert(!BenchLegacy.referenceGrade(Some(true), Set.empty, Set.empty))
+    assert(!BenchLegacy.referenceGrade(None, Set.empty, Set.empty))
     // comparable but a query failed: the -1.0 headline must not read as
     // "this run is the reference" — the line carries last_clean instead
-    assert(!Bench.referenceGrade(Some(false), Set("q99"), Set.empty))
+    assert(!BenchLegacy.referenceGrade(Some(false), Set("q99"), Set.empty))
     // comparable but a suspect: the spiked min is in the headline sum
-    assert(!Bench.referenceGrade(Some(false), Set.empty, Set("d57_containment")))
+    assert(!BenchLegacy.referenceGrade(Some(false), Set.empty, Set("d57_containment")))
   }
-
-  test("last_clean: only a reference-grade line qualifies as the trusted number") {
-    // a comparable line with a FAILED query carries the -1.0 headline
-    // sentinel; a comparable line with a suspect carries the spiked min
-    // in its headline sum (the rerun is recorded beside it, not
-    // merged). Neither is a number to present as "trusted" — the
-    // reference must skip back to the last line with neither.
-    def failedLine(): String = {
-      val cov = Bench.covariateJson(Some((1.0, 1.0, 1.0)), Some(0L))
-      val body = s"""{${Bench.lineHead("both", 32, "/root/testdata/sf0.1", cov, cov)},""" +
-        s""""samples":{"q01":[1.0]},"queries":{"q01":1.0},""" +
-        s""""failed":["q99"],"value":-1.0,""" +
-        s"""${Bench.verdictFields(Some(0L), Some(false))}}"""
-      Bench.historyLine(body, "2026-08-15T05:00:00Z", "f" * 40, 1)
-    }
-    val f = tmpFile(Seq(
-      syntheticLine(4.0),                    // reference-grade, value 5.0
-      leadLine(3.22, rerun = Some(3.58)),    // comparable but suspect-inflated
-      failedLine()                           // comparable but value -1.0
-    ).mkString("", "\n", "\n"))
-    val (_, last, ref) = Bench.scanHistory(f, 32, Some(0.1), headlineOrdered = true)
-    // lead adjudication still targets the last comparable line's leads…
-    assert(last.exists(_.sha === "f" * 40))
-    // …but the trusted reference skips both disqualified lines
-    assert(ref === Some(Bench.CleanRef("2026-08-14T00:00:00Z", "b" * 40,
-      Some(1), 5.0)))
-  }
-
-  test("BENCH_SUMMARY: complete, parseable, schema-pinned") {
-    val p = Bench.CleanRef("2026-08-15T01:00:00Z", "c" * 40, Some(1), 52.45)
-    val sus = Bench.suspectJson(Map("d57_containment" -> ((4.025, 6))),
-      Map("d57_containment" -> 12.46), Map.empty, None)
-    val pri = Bench.priorSuspectJson(Map.empty, None, freshJvm = true,
-      Map.empty, Map.empty)
-    // the r18 driver-capture shape: dirty headline, d57 suspect, and —
-    // new — the trusted clean reference in the same parseable artifact
-    val j = JsonMethods.parse(Bench.summaryJson("2026-08-15T04:00:00Z",
-      "f" * 40, 1, "both", 32, "/root/testdata/sf0.1", 74.16, "[]",
-      sus, pri, """"band_verdict":null""", refGrade = false, Some(true),
-      Some(p), Some(2411L)))
-    assert(j \ "ts" === JString("2026-08-15T04:00:00Z"))
-    assert(j \ "sha" === JString("f" * 40))
-    assert(j \ "jvm_run" === JInt(1))
-    assert(j \ "mode" === JString("both"))
-    assert(j \ "cpus" === JInt(32))
-    assert(j \ "sf_num" === JDouble(0.1))
-    assert(j \ "value" === JDouble(74.16))
-    assert(j \ "failed" === JArray(Nil))
-    assert(j \ "suspect" === JArray(List(JString("d57_containment"))))
-    assert(j \ "suspect_detail" \ "d57_containment" \ "min" === JDouble(12.46))
-    assert(j \ "prior_suspect" === JObject(Nil))
-    assert(j \ "prior_suspect_src" === JNull)
-    assert(j \ "band_verdict" === JNull)
-    assert(j \ "last_clean" \ "value" === JDouble(52.45))
-    assert(j \ "steal_delta" === JInt(2411))
-    assert(j \ "noncomparable" === JBool(true))
-    // reference-grade run: last_clean null (the run itself is the
-    // reference); a computed band verdict splices through verbatim
-    val bv = Bench.bandVerdictJson(Some(Bench.BandVerdict("above", 51, 56,
-      52, 1.13, 0.92, 0.0, 1.4, 0.98, "diffuse")))
-    val clean = JsonMethods.parse(Bench.summaryJson("t", "s", 2, "both", 32,
-      "/root/testdata/sf0.1", 52.45, "[]", sus, pri, bv, refGrade = true,
-      Some(false), Some(p), Some(10L)))
-    assert(clean \ "last_clean" === JNull)
-    assert(clean \ "jvm_run" === JInt(2))
-    assert(clean \ "noncomparable" === JBool(false))
-    assert(clean \ "band_verdict" \ "class" === JString("diffuse"))
-    // comparable but failed/suspect (r19 ADVICE): the summary's
-    // last_clean is POPULATED — null no longer doubles as both "this
-    // run is the reference" and "the reference couldn't be named"
-    val failedRun = JsonMethods.parse(Bench.summaryJson("t", "s", 1, "both",
-      32, "/root/testdata/sf0.1", -1.0, """["q99"]""", sus, pri,
-      """"band_verdict":null""",
-      refGrade = Bench.referenceGrade(Some(false), Set("q99"), Set.empty),
-      Some(false), Some(p), Some(10L)))
-    assert(failedRun \ "last_clean" \ "value" === JDouble(52.45))
-    assert(failedRun \ "noncomparable" === JBool(false))
-  }
-
-  // ── Round 20: band verdict (clean-but-out-of-band self-classification) ──
-
-  private def band(lo: Double = 51, hi: Double = 56): Option[Bench.AnchorBand] =
-    Some(Bench.AnchorBand(lo, hi, Some(32), Some(0.1), Some("b" * 40)))
-
-  /** A 10-query base cohort (band-sha minima, 2.0 s each) — this run's
-    * mins scaled per query are the knobs the class bars read. */
-  private def bandsOf(n: Int = 10): Map[String, Double] =
-    (1 to n).map(i => f"q$i%02d" -> 2.0).toMap
 
   test("bandVerdict: the r19 59.36s shape — above the band, diffuse") {
     // 90% of queries elevated ~1.13x vs the band-sha floor, headline
     // 59.36 over hi 56: the --compare --band DIFFUSE verdict (the real
     // line read median 1.20x, 84% elevated), computed on the line
     val best = (1 to 9).map(i => f"q$i%02d" -> 2.26).toMap + ("q10" -> 2.0)
-    val Some(v) = Bench.bandVerdict(59.36, Some(false), band(), 32,
+    val Some(v) = BenchLegacy.bandVerdict(59.36, Some(false), band(), 32,
       Some(0.1), best, bandsOf())
     assert(v.side === "above" && v.cls === "diffuse")
     assert(v.n === 10 && v.fracUp === 0.9 && v.medianRatio === 1.13)
@@ -567,7 +108,7 @@ class BenchSuspectSpec extends AnyFunSuite {
 
   test("bandVerdict: one hot plan over a calm median — concentrated") {
     val best = (1 to 9).map(i => f"q$i%02d" -> 2.0).toMap + ("q10" -> 5.0)
-    val Some(v) = Bench.bandVerdict(59.0, Some(false), band(), 32,
+    val Some(v) = BenchLegacy.bandVerdict(59.0, Some(false), band(), 32,
       Some(0.1), best, bandsOf())
     assert(v.side === "above" && v.cls === "concentrated")
     assert(v.maxRatio === 2.5 && v.medianRatio === 1.0)
@@ -579,7 +120,7 @@ class BenchSuspectSpec extends AnyFunSuite {
     // line. (Round 19's "49.14s fast-side line" turned out to be an
     // sf0.001 smoke — a foreign cohort this verdict's gates exclude.)
     val best = (1 to 10).map(i => f"q$i%02d" -> 1.8).toMap
-    val Some(v) = Bench.bandVerdict(49.14, Some(false), band(), 32,
+    val Some(v) = BenchLegacy.bandVerdict(49.14, Some(false), band(), 32,
       Some(0.1), best, bandsOf())
     assert(v.side === "below" && v.cls === "diffuse")
     assert(v.fracDown === 1.0 && v.medianRatio === 0.9)
@@ -587,7 +128,7 @@ class BenchSuspectSpec extends AnyFunSuite {
 
   test("bandVerdict: one much-faster plan over a calm median — concentrated below") {
     val best = (1 to 9).map(i => f"q$i%02d" -> 2.0).toMap + ("q10" -> 0.5)
-    val Some(v) = Bench.bandVerdict(50.0, Some(false), band(), 32,
+    val Some(v) = BenchLegacy.bandVerdict(50.0, Some(false), band(), 32,
       Some(0.1), best, bandsOf())
     assert(v.side === "below" && v.cls === "concentrated")
     assert(v.minRatio === 0.25)
@@ -596,7 +137,7 @@ class BenchSuspectSpec extends AnyFunSuite {
   test("bandVerdict: per-query evidence not backing the excursion — comparable") {
     // headline outside but ratios all ~1: sum noise, neither verdict
     val best = (1 to 10).map(i => f"q$i%02d" -> 2.02).toMap
-    val Some(v) = Bench.bandVerdict(56.5, Some(false), band(), 32,
+    val Some(v) = BenchLegacy.bandVerdict(56.5, Some(false), band(), 32,
       Some(0.1), best, bandsOf())
     assert(v.cls === "comparable")
   }
@@ -605,110 +146,54 @@ class BenchSuspectSpec extends AnyFunSuite {
     val best = (1 to 10).map(i => f"q$i%02d" -> 2.26).toMap
     val all = bandsOf()
     // in-band headline: nothing to classify
-    assert(Bench.bandVerdict(52.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(52.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
     // exactly at the edges: inside, inclusive
-    assert(Bench.bandVerdict(51.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
-    assert(Bench.bandVerdict(56.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(51.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(56.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
     // dirty/unknown run: the covariates already explain the excursion
-    assert(Bench.bandVerdict(59.0, Some(true), band(), 32, Some(0.1), best, all).isEmpty)
-    assert(Bench.bandVerdict(59.0, None, band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(true), band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, None, band(), 32, Some(0.1), best, all).isEmpty)
     // no band file / foreign (cpus, sf) cohort: the band judges ONE cohort
-    assert(Bench.bandVerdict(59.0, Some(false), None, 32, Some(0.1), best, all).isEmpty)
-    assert(Bench.bandVerdict(59.0, Some(false), band(), 8, Some(0.1), best, all).isEmpty)
-    assert(Bench.bandVerdict(59.0, Some(false), band(), 32, Some(0.001), best, all).isEmpty)
-    assert(Bench.bandVerdict(59.0, Some(false), band(), 32, None, best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), None, 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), band(), 8, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), band(), 32, Some(0.001), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), band(), 32, None, best, all).isEmpty)
     // the -1.0 failed sentinel is "below the band" arithmetically but
     // must never classify
-    assert(Bench.bandVerdict(-1.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
+    assert(BenchLegacy.bandVerdict(-1.0, Some(false), band(), 32, Some(0.1), best, all).isEmpty)
     // sub-floor base mins are timer noise and an empty base cohort
     // (sha-less band / no comparable lines at the sha) never
     // classifies: no qualifying ratios -> null
     val tiny = (1 to 10).map(i => f"q$i%02d" -> 0.01).toMap
-    assert(Bench.bandVerdict(59.0, Some(false), band(), 32, Some(0.1), best, tiny).isEmpty)
-    assert(Bench.bandVerdict(59.0, Some(false), band(), 32, Some(0.1), best, Map.empty).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), band(), 32, Some(0.1), best, tiny).isEmpty)
+    assert(BenchLegacy.bandVerdict(59.0, Some(false), band(), 32, Some(0.1), best, Map.empty).isEmpty)
     // the base pass is lazy: an in-band run must never pay for it
     var scanned = false
     def lazyBase: Map[String, Double] = { scanned = true; all }
-    assert(Bench.bandVerdict(52.0, Some(false), band(), 32, Some(0.1), best, lazyBase).isEmpty)
+    assert(BenchLegacy.bandVerdict(52.0, Some(false), band(), 32, Some(0.1), best, lazyBase).isEmpty)
     assert(!scanned, "in-band run must not evaluate the base cohort")
-  }
-
-  test("bandShaMins: cohort minima at ONE sha; foreign shas and dirty lines excluded") {
-    // syntheticLine stamps sha b*40; leadLine stamps c*40 by default —
-    // the base cohort is the band sha's lines only, min across them
-    val f = tmpFile(Seq(
-      syntheticLine(4.0),                      // b-sha, d57 4.0 / q01 1.0
-      syntheticLine(3.8),                      // b-sha, d57 3.8 / q01 1.0
-      syntheticLine(2.0, clean = false),       // b-sha but DIRTY: excluded
-      leadLine(1.0, flagged = false)           // c-sha: foreign, excluded
-    ).mkString("", "\n", "\n"))
-    val base = Bench.bandShaMins(f, "b" * 40, 32, Some(0.1), headlineOrdered = true)
-    assert(base === Map("d57_containment" -> 3.8, "q01" -> 1.0))
-    // prefix match (band files store the full sha; accept a prefix)
-    assert(Bench.bandShaMins(f, "b" * 8, 32, Some(0.1), true)("d57_containment") === 3.8)
-    // empty sha never matches everything; missing file is empty, not fatal
-    assert(Bench.bandShaMins(f, "", 32, Some(0.1), true).isEmpty)
-    assert(Bench.bandShaMins("/no/such.jsonl", "b" * 40, 32, Some(0.1), true).isEmpty)
   }
 
   test("readAnchorBand: the real file shape parses; garbage is None, never fatal") {
     val good = tmpFile(
       """{"lo":51,"hi":56,"anchored":"2026-08-15","sha":"abc","n":5,""" +
         """"cpus":32,"sf_num":0.1,"values":[54.3],"source":"x"}""")
-    assert(Bench.readAnchorBand(good)
-      === Some(Bench.AnchorBand(51.0, 56.0, Some(32), Some(0.1), Some("abc"))))
+    assert(BenchLegacy.readAnchorBand(good)
+      === Some(BenchLegacy.AnchorBand(51.0, 56.0, Some(32), Some(0.1), Some("abc"))))
     // lo/hi must be finite numbers; cpus/sf_num/sha may be absent
     // (older band vintages) — the cohort gate / base pass then refuse
-    assert(Bench.readAnchorBand(tmpFile("""{"lo":51}""")).isEmpty)
-    assert(Bench.readAnchorBand(tmpFile("""{"lo":"51","hi":56}""")).isEmpty)
-    assert(Bench.readAnchorBand(tmpFile("""{"lo":1e999,"hi":56}""")).isEmpty)
-    assert(Bench.readAnchorBand(tmpFile("""{"lo":51,"hi":56}"""))
-      === Some(Bench.AnchorBand(51.0, 56.0, None, None, None)))
-    assert(Bench.readAnchorBand(tmpFile("not json")).isEmpty)
-    assert(Bench.readAnchorBand("/no/such/band.json").isEmpty)
-  }
-
-  test("last_clean prefers the most recent IN-BAND reference and discloses position") {
-    // Two reference-grade lines: an older in-band one (value 5.0) and a
-    // newer out-of-band one (value 9.0 — e.g. a clean suspect-free line
-    // from a diffusely-elevated stretch, like the real 58.41 s line of
-    // 2026-08-15 against [51, 56]). The reference must be the older
-    // in-band line, tagged in_band:true — a valid measurement of a
-    // degraded host is a worse baseline than a normal-period line.
-    val f = tmpFile(Seq(syntheticLine(4.0), syntheticLine(8.0))
-      .mkString("", "\n", "\n"))
-    val narrow = Some(Bench.AnchorBand(4, 6, Some(32), Some(0.1), None))
-    val (_, _, ref) = Bench.scanHistory(f, 32, Some(0.1), true, narrow)
-    assert(ref.exists(r => r.value === 5.0 && r.inBand === Some(true)))
-    // no band / foreign-cohort band: round-19 behavior — most recent
-    // reference-grade line, position undisclosed (null)
-    val (_, _, noBand) = Bench.scanHistory(f, 32, Some(0.1), true)
-    assert(noBand.exists(r => r.value === 9.0 && r.inBand === None))
-    val foreign = Some(Bench.AnchorBand(4, 6, Some(8), Some(0.1), None))
-    val (_, _, offCohort) = Bench.scanHistory(f, 32, Some(0.1), true, foreign)
-    assert(offCohort.exists(r => r.value === 9.0 && r.inBand === None))
-    // every reference-grade line out of band (stale band / degraded
-    // stretch): fall back to the most recent one, honestly tagged
-    // in_band:false — never null, which would read as "no reference"
-    val low = Some(Bench.AnchorBand(1, 2, Some(32), Some(0.1), None))
-    val (_, _, allOut) = Bench.scanHistory(f, 32, Some(0.1), true, low)
-    assert(allOut.exists(r => r.value === 9.0 && r.inBand === Some(false)))
-    // serialization: in_band rides in the last_clean object
-    import org.json4s.jackson.JsonMethods
-    assert(JsonMethods.parse(Bench.lastCleanInner(
-      Some(Bench.CleanRef("t", "s", Some(1), 5.0, Some(true)))))
-      \ "in_band" === JBool(true))
-    assert(JsonMethods.parse(Bench.lastCleanInner(
-      Some(Bench.CleanRef("t", "s", Some(1), 9.0, Some(false)))))
-      \ "in_band" === JBool(false))
-    assert(JsonMethods.parse(Bench.lastCleanInner(
-      Some(Bench.CleanRef("t", "s", Some(1), 9.0, None))))
-      \ "in_band" === JNull)
+    assert(BenchLegacy.readAnchorBand(tmpFile("""{"lo":51}""")).isEmpty)
+    assert(BenchLegacy.readAnchorBand(tmpFile("""{"lo":"51","hi":56}""")).isEmpty)
+    assert(BenchLegacy.readAnchorBand(tmpFile("""{"lo":1e999,"hi":56}""")).isEmpty)
+    assert(BenchLegacy.readAnchorBand(tmpFile("""{"lo":51,"hi":56}"""))
+      === Some(BenchLegacy.AnchorBand(51.0, 56.0, None, None, None)))
+    assert(BenchLegacy.readAnchorBand(tmpFile("not json")).isEmpty)
+    assert(BenchLegacy.readAnchorBand("/no/such/band.json").isEmpty)
   }
 
   test("bandVerdictJson: parseable both populated and null; non-finite guarded") {
-    val j = JsonMethods.parse("{" + Bench.bandVerdictJson(Some(
-      Bench.BandVerdict("below", 51, 56, 52, 0.9013, 0.02, 0.85,
+    val j = JsonMethods.parse("{" + BenchLegacy.bandVerdictJson(Some(
+      BenchLegacy.BandVerdict("below", 51, 56, 52, 0.9013, 0.02, 0.85,
         1.02, 0.25, "diffuse"))) + "}")
     val b = j \ "band_verdict"
     assert(b \ "side" === JString("below"))
@@ -718,44 +203,13 @@ class BenchSuspectSpec extends AnyFunSuite {
     assert(b \ "frac_up" === JDouble(0.02) && b \ "frac_down" === JDouble(0.85))
     assert(b \ "max_ratio" === JDouble(1.02) && b \ "min_ratio" === JDouble(0.25))
     assert(b \ "class" === JString("diffuse"))
-    assert(Bench.bandVerdictJson(None) === """"band_verdict":null""")
+    assert(BenchLegacy.bandVerdictJson(None) === """"band_verdict":null""")
     // a non-finite ratio (can only arise from a mangled band) emits
     // null, never the JSON-invalid Infinity token
-    val nan = JsonMethods.parse("{" + Bench.bandVerdictJson(Some(
-      Bench.BandVerdict("above", 51, 56, 1, Double.NaN, 0, 0,
+    val nan = JsonMethods.parse("{" + BenchLegacy.bandVerdictJson(Some(
+      BenchLegacy.BandVerdict("above", 51, 56, 1, Double.NaN, 0, 0,
         Double.PositiveInfinity, 1.0, "comparable"))) + "}")
     assert(nan \ "band_verdict" \ "median_ratio" === JNull)
     assert(nan \ "band_verdict" \ "max_ratio" === JNull)
-  }
-
-  test("scan-cost canary: a 200-line, 74-query history scans in trivial time") {
-    // The history is append-only and every run scans it once (bands +
-    // prior leads, one pass). This pins that the scan stays trivially
-    // cheap at ABOVE the real file's scale (163 lines as of round 19),
-    // answering "cap the band scan to the last N lines?" with a
-    // measured NO — revisit the cap only if this canary's budget ever
-    // tightens. Budget is deliberately loose (10 s on a possibly-stormy
-    // CI host) against an expected few hundred ms.
-    val queries = (1 to 74).map(i => f"q$i%02d_synthetic")
-    val cov = Bench.covariateJson(Some((1.0, 1.0, 1.0)), Some(0L))
-    def bigLine(i: Int): String = {
-      val samples = queries.map { q =>
-        val base = 0.5 + (q.hashCode.abs % 100) / 50.0
-        s""""$q":[${base + 0.3},${base + 0.1},$base]"""
-      }.mkString("{", ",", "}")
-      val body = s"""{${Bench.lineHead("both", 32, "/root/testdata/sf0.1", cov, cov)},""" +
-        s""""samples":$samples,"failed":[],"value":60.0,""" +
-        s"""${Bench.verdictFields(Some(0L), Some(false))}}"""
-      Bench.historyLine(body, "2026-08-15T00:00:00Z", "b" * 40, 1)
-    }
-    val f = tmpFile((1 to 200).map(bigLine).mkString("", "\n", "\n"))
-    val t0 = System.nanoTime()
-    val (bands, last, _) = Bench.scanHistory(f, 32, Some(0.1), headlineOrdered = true)
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(bands.size === 74 && bands.values.forall(_.size == 200))
-    assert(last.exists(_.leads.isEmpty))
-    info(f"scanHistory over 200x74 lines: $elapsedMs%.0f ms")
-    assert(elapsedMs < 10000.0,
-      f"history scan took $elapsedMs%.0f ms — consider capping the band scan")
   }
 }

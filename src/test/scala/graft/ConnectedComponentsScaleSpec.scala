@@ -56,6 +56,9 @@ class ConnectedComponentsScaleSpec extends SparkSpec {
     // an O(diameter) regression (20k rounds) anywhere near passing.
     assert(rounds <= 25,
       s"round count $rounds is not the advertised O(log² n) behavior")
+    // rounds run in pairs (two star rounds per fingerprint job), so the
+    // reported count is even and the 50-round budget is never overshot
+    assert(rounds % 2 === 0, s"round count $rounds must be even")
 
     val got = labelsDf.as[(Long, Long)].collect().toMap
     val want = unionFind(all.filter { case (a, b) => a != b })

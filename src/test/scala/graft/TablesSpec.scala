@@ -202,6 +202,23 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
     assert(Tables.spread(wide, col("id")) eq wide)
   }
 
+  test("spread reads a repartitioned wide scan at its narrowed width, not the scan's") {
+    // The scan alone is wide enough to pass through, but repartition(1)
+    // narrows the frame to one partition above it. The scan's split
+    // count says nothing about that frame, so spread must see the
+    // narrowing and widen it back to the session parallelism.
+    val want = spark.sparkContext.defaultParallelism
+    val dir = tmp("spread-narrowed")
+    spark.range(800).toDF("id").repartition(2 * want).write.parquet(s"$dir/t.parquet")
+    val wideScan = spark.read.parquet(s"$dir/t.parquet")
+    assert(wideScan.rdd.getNumPartitions >= want, "fixture must plan a wide scan")
+    assert(Tables.spread(wideScan, col("id")) eq wideScan)
+    val narrowed = wideScan.repartition(1)
+    val sp = Tables.spread(narrowed, col("id"))
+    assert(sp.rdd.getNumPartitions === want)
+    assert(sp.count() === 800)
+  }
+
   test("an unrecognized ts type fails loudly instead of mis-deriving ts_us") {
     val dir = tmp("bad")
     spark.range(1).select(lit("2020-01-01").as("ts"), lit(7L).as("user_id"))
